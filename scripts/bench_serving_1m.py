@@ -43,9 +43,6 @@ def main() -> None:
     ap.add_argument("--cpus", type=int, default=8)
     ap.add_argument("--passes", type=int, default=5)
     ap.add_argument("--slab", type=int, default=25_000)
-    ap.add_argument("--threads", type=int, default=1,
-                    help="serving_threads: 1=serial (the measured-good "
-                         "mode; the pool convoys on the GIL), 0=auto pool")
     ap.add_argument("--compact", action="store_true",
                     help="splice-compact to one generation first")
     ap.add_argument("--cache-bytes", type=int, default=0,
@@ -98,7 +95,6 @@ def main() -> None:
         t_compact = time.time() - t0
         open(compact_marker, "w").write("ok")
     eng = SearchEngine(spark, idx)
-    eng.serving_threads = args.threads
     if args.cache_bytes:
         eng.serving_cache_max_bytes = args.cache_bytes
     if args.decoded_bytes >= 0:
@@ -191,7 +187,6 @@ def main() -> None:
             "per_pass_sec": per_pass,
             "build_sec": None if t_build is None else round(t_build, 1),
             "compact_sec": None if t_compact is None else round(t_compact, 1),
-            "serving_threads": args.threads,
             "cache_max_bytes": eng.serving_cache_max_bytes,
             "decoded_max_bytes": eng.serving_decoded_max_bytes,
             "parallelism": args.cpus,

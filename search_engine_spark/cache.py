@@ -9,13 +9,21 @@ TTL+LRU map in front of the no-Spark ``search_local*`` path, which is
 where a result cache belongs (the Spark batch paths are one-shot jobs;
 caching them is the job scheduler's business, not the engine's).
 
+Two callers, two key schemes.  ``search_key`` (the reference format)
+is used by ``SearchEngine.search_local_cached`` and contract.py; that
+cache is the engine's own and ``SearchEngine.refresh()`` drops it
+wholesale.  ``SearchDocumentsUseCase`` keys its cache by
+``search:`` plus the repr of a (path, engine generation, query, page,
+size, sortBy, filters, ranges) tuple; that cache survives
+``refresh()`` and is invalidated through the generation in its key,
+so a prefix ``invalidate()`` in the reference format matches none of
+its entries.
+
 Scale note: on a real serving fleet this object is per-process state
 behind a load balancer, exactly like a Redis-less local cache tier;
 swapping ``SearchCache`` for a Redis client changes none of the
-call sites because the port surface (get/put/invalidate + key format)
-is the reference's own.  Invalidation is by engine generation:
-``SearchEngine.refresh()`` drops the cache wholesale, mirroring how
-the reference's TTL bounds staleness after index updates.
+call sites because the port surface (get/put/invalidate) is the
+reference's own.
 """
 
 from __future__ import annotations

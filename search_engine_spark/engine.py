@@ -11,7 +11,6 @@ for metadata/snippets.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,21 +65,45 @@ def pack_admission_rows(adm: DataFrame, slab_size: int, gi: int) -> DataFrame:
 def _msm_count(msm, n: int) -> int:
     """ES minimum_should_match value -> required distinct-term count.
 
-    The full ES grammar subset: a positive int passes through; a
-    NEGATIVE int means "total minus that many may be missing" (n+m);
-    "P%" takes floor(n*P/100); "-P%" means n minus floor(n*P/100) —
-    percentages round DOWN before use, the documented ES rule.  The
-    result clamps at 0, and m <= 1 normalizes to 0: every scored doc
-    matches at least one clause, so msm=1 IS plain OR — returning 0
-    keeps the serving fused fast path and the count-free kernels."""
+    Accepted forms, ``n`` being the number of optional clauses:
+
+    - ``None``: no requirement (0);
+    - an int, or a string of ASCII digits with an optional leading
+      sign (``2``, ``"2"``, ``"+2"``, ``-1``, ``"-1"``): a positive
+      value is the count; a NEGATIVE one means "total minus that many
+      may be missing" (n+m);
+    - ``"P%"`` or ``"+P%"`` takes floor(n*P/100); ``"-P%"`` means n
+      minus floor(n*P/100) — percentages round DOWN before use, the
+      documented ES rule.
+
+    Surrounding whitespace in a string is ignored.  The ES combination
+    form (``"3<90%"``, or several of them) is not supported and raises
+    ValueError, as does any other string.  The result clamps at 0, and
+    m <= 1 normalizes to 0: every scored doc matches at least one
+    clause, so msm=1 IS plain OR — returning 0 keeps the serving fused
+    fast path and the count-free kernels."""
+    import re
+
     if msm is None:
         return 0
     if isinstance(msm, str):
         s = msm.strip()
-        if not s.endswith("%"):
-            raise ValueError(f"minimum_should_match {msm!r}: int or 'P%'")
-        p = int(s[:-1])
-        m = (n * p) // 100 if p >= 0 else n - ((n * -p) // 100)
+        if "<" in s:
+            raise ValueError(
+                f"minimum_should_match {msm!r}: the combination form "
+                "'N<M' is not supported"
+            )
+        got = re.fullmatch(r"([+-]?[0-9]+)(%?)", s)
+        if got is None:
+            raise ValueError(
+                f"minimum_should_match {msm!r}: int, 'N', '-N', 'P%' "
+                "or '-P%'"
+            )
+        v = int(got.group(1))
+        if got.group(2):
+            m = (n * v) // 100 if v >= 0 else n - ((n * -v) // 100)
+        else:
+            m = v if v >= 0 else n + v
     else:
         m = int(msm)
         if m < 0:
@@ -108,6 +131,20 @@ def _dto_ranges(date_from, date_to, min_quality):
     return ranges or None
 
 
+class _ArrowStrings:
+    """A sorted Arrow string array as a read-only sequence of Python
+    strings, for ``bisect``: one scalar conversion per probe."""
+
+    def __init__(self, arr):
+        self._arr = arr
+
+    def __len__(self) -> int:
+        return len(self._arr)
+
+    def __getitem__(self, i: int) -> str:
+        return self._arr[i].as_py()
+
+
 class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str, cache: bool = True):
         self.spark = spark
@@ -133,19 +170,9 @@ class SearchEngine:
         # Eviction drops the arrays only — the encoded rows stay in
         # the bucket cache, so a re-miss costs one full decode, not IO.
         self.serving_decoded_max_bytes = 2 << 30
-        # per-query slab fan-out for the no-Spark serving paths.
-        # MEASURED NEGATIVE RESULT (r5, 1.09M docs): slabs are
-        # independent, but the WAND kernel is a Python loop over small
-        # numpy ops that never release the GIL long enough — threads
-        # monotonically DEGRADE latency (6-term hot query: 1=1163ms,
-        # 2=1623ms, 4=5074ms, 8=7081ms; pure GIL convoy).  Default is
-        # therefore serial; the knob + bit-parity test stay for a
-        # free-threaded/nogil future.  The tail fix that worked is in
-        # the kernel instead: query/wand.py dense-query exhaustive
-        # mode + codec.py decode fast paths (1163 -> 264ms same query).
-        self.serving_threads = 1
-        self._serving_pool = None
-        self._serving_pool_size = 0
+        # index generation: refresh() bumps it, so a cache keyed on it
+        # (the use case's response cache) never serves an old index
+        self.generation = 0
         self.refresh()
 
     def refresh(self) -> "SearchEngine":
@@ -156,6 +183,7 @@ class SearchEngine:
         pyarrow dataset over deleted segment files."""
         from search_engine_spark.catalog import store_for
 
+        self.generation += 1
         self.store = store_for(self.index_dir)
         self.meta = self.store.get_meta(self.spark)
         for df in (getattr(self, "segments", None), getattr(self, "df_table", None)):
@@ -179,7 +207,10 @@ class SearchEngine:
         self._decoded_cache: "_OD[str, tuple[list, int]]" = _OD()
         self._decoded_nbytes = 0
         self._df_cache: dict[str, int] = {}
-        self._dym_dict: tuple[int, set[str]] | None = None
+        # did_you_mean spelling dictionaries, (dict_terms,
+        # SpellingIndex), one per path, built lazily per generation
+        self._dym_dict = None
+        self._dym_local = None
         # full content-namespace {term: df} for serving-side fuzzy /
         # prefix expansion; built lazily once per generation
         self._local_vocab: dict[str, int] | None = None
@@ -203,6 +234,11 @@ class SearchEngine:
             and self.store.exists("term_slabs")
             else None
         )
+        # term -> summed inventory df (distinct docs), filled by the
+        # same lookup as _term_slab_cache
+        self._term_df_sum: dict[str, int] = {}
+        # the whole (term, slab) inventory, term-sorted (_slab_inventory)
+        self._inventory = None
         # tombstones (delete_documents): False = not yet loaded this
         # generation; None = none pending; ndarray = sorted global
         # docids.  Loaded lazily, dropped by refresh() like every
@@ -211,6 +247,9 @@ class SearchEngine:
         self._tombdf = None
         # serving-tier docmap field arrays (facets), per generation
         self._field_arrs: dict = {}
+        # serving-tier page store (_page_store): (sorted docids, DTO
+        # projection table), per generation
+        self._pages = None
         # serving-tier numeric doc-values arrays (range filters:
         # dateFrom/dateTo/minContentQuality), per generation
         self._dv_arrs: dict = {}
@@ -252,32 +291,75 @@ class SearchEngine:
 
     def _slabs_for(self, terms: list[str]):
         """Union of slabs the query terms occur in, from the tiny
-        (term, slab) inventory written at build time — read driver-
-        side via pyarrow (no Spark job) and cached per engine
-        generation.  Returns None (no pruning) when the inventory is
-        absent (pre-term_slabs index) or the store is catalog-backed."""
+        (term, slab) inventory written at build time, held in memory
+        per engine generation (_slab_inventory) and memoized per term
+        together with its summed df.  Returns None (no pruning) when
+        the inventory is absent (pre-term_slabs index) or the store is
+        catalog-backed."""
         cache = self._term_slab_cache
         if cache is None:
             return None
         missing = [t for t in terms if t not in cache]
         if missing:
-            import pyarrow.dataset as ds
+            from bisect import bisect_left
 
-            tab = ds.dataset(f"{self.index_dir}/term_slabs").to_table(
-                filter=ds.field("term").isin(missing),
-                columns=["term", "slab"],
-            )
-            got: dict[str, set] = {}
-            for t, s in zip(
-                tab.column("term").to_pylist(), tab.column("slab").to_pylist()
-            ):
-                got.setdefault(t, set()).add(int(s))
+            uniq, starts, slabs, dfs = self._slab_inventory()
             for t in missing:
-                cache[t] = frozenset(got.get(t, ()))
+                i = bisect_left(uniq, t)
+                if i < len(uniq) and uniq[i] == t:
+                    cache[t] = frozenset(
+                        slabs[starts[i]:starts[i + 1]].tolist()
+                    )
+                    self._term_df_sum[t] = int(dfs[i])
+                else:
+                    cache[t] = frozenset()
+                    self._term_df_sum[t] = 0
         out: set[int] = set()
         for t in terms:
             out |= cache[t]
         return out
+
+    def _slab_inventory(self):
+        """The whole (term, slab, df) inventory, read once per
+        generation and sorted by term: (distinct terms, run starts
+        into ``slabs``, slabs, summed df per term).  The terms stay an
+        Arrow string array searched by bisection, so a term's first
+        lookup costs O(log terms) and no IO, and the inventory holds
+        no Python object per term.  Arrow orders strings by their
+        UTF-8 bytes, which is Python's code-point order."""
+        if self._inventory is None:
+            import numpy as np
+            import pyarrow.compute as pc
+            import pyarrow.dataset as ds
+
+            tab = ds.dataset(f"{self.index_dir}/term_slabs").to_table(
+                columns=["term", "slab", "df"]
+            ).sort_by("term")
+            terms = tab.column("term").combine_chunks()
+            n = len(terms)
+            starts = np.zeros(0, dtype=np.int64)
+            if n:
+                new_run = pc.not_equal(terms[1:], terms[:-1])
+                starts = np.concatenate((
+                    [0],
+                    np.flatnonzero(
+                        new_run.to_numpy(zero_copy_only=False)
+                    ) + 1,
+                )).astype(np.int64)
+            df = pc.fill_null(tab.column("df"), 0).to_numpy().astype(
+                np.int64
+            )
+            dfs = (
+                np.add.reduceat(df, starts) if n
+                else np.zeros(0, dtype=np.int64)
+            )
+            self._inventory = (
+                _ArrowStrings(terms.take(starts)),
+                np.append(starts, n),
+                tab.column("slab").to_numpy().astype(np.int64),
+                dfs,
+            )
+        return self._inventory
 
     def _idf_rows(self, terms: list[str]):
         n = float(self.meta["n_docs"])
@@ -1381,33 +1463,43 @@ class SearchEngine:
             del dc[term]
         import numpy as np
 
-        from search_engine_spark.indexer.codec import TermChunk
+        from search_engine_spark.indexer.codec import TermChunk, tf_norm_factor
 
-        bs = int(self.meta["block_size"])
-        ss = int(self.meta["slab_size"])
+        m = self.meta
+        bs = int(m["block_size"])
+        ss = int(m["slab_size"])
+        fkey = (float(m["k1"]), float(m["b"]), float(m["avgdl"]))
         nb = 0
         gid_parts = []
+        fac_parts = []
+        chunks = []
         for r in rows:
             c = TermChunk(r["postings"], r["skips"], r["block_max"])
             c._full = c._decode_full(bs)
             c._full_block_size = bs
             nb += sum(int(a.nbytes) for a in c._full)
             r["_chunk"] = c
+            chunks.append(c)
             gid_parts.append(c._full[0] + int(r["slab"]) * ss)
-        # the term's postings as ONE global array pair: docids here,
-        # tf-norm factors lazily on first scoring (keyed by avgdl) —
-        # the slab-fused scorer (_fused_dense) runs off these with no
-        # per-chunk Python loop in the query path
-        gids = (
-            gid_parts[0] if len(gid_parts) == 1
-            else np.concatenate(gid_parts)
+            fac_parts.append(tf_norm_factor(c._full[1], c._full[2], *fkey))
+        # the term's postings as ONE global array pair, docids and
+        # tf-norm factors — the slab-fused scorer (_fused_dense) runs
+        # off these with no per-chunk Python loop in the query path.
+        # Each chunk's factor memo (TermChunk.factor_all, the per-slab
+        # kernels) is a view of the same factor array, so no scoring
+        # path computes a factor after priming and a term's first
+        # query costs what its later ones do.  Title chunks score with
+        # their own avgdl and still memoize on first use.
+        gids, fac = (
+            (gid_parts[0], fac_parts[0]) if len(gid_parts) == 1
+            else (np.concatenate(gid_parts), np.concatenate(fac_parts))
         )
-        nb += int(gids.nbytes)
-        nb += int(gids.nbytes)  # reserve for the f64 factor array
-        dc[term] = {
-            "rows": rows, "nb": nb, "gids": gids,
-            "fkey": None, "fac": None,
-        }
+        off = 0
+        for c, f in zip(chunks, fac_parts):
+            c._fnorm = (fkey, fac[off:off + len(f)])
+            off += len(f)
+        nb += int(gids.nbytes) + int(fac.nbytes)
+        dc[term] = {"rows": rows, "nb": nb, "gids": gids, "fac": fac}
         self._decoded_nbytes += nb
         while len(dc) > 1 and (
             self._decoded_nbytes > self.serving_decoded_max_bytes
@@ -1461,8 +1553,6 @@ class SearchEngine:
         max_slab = max(by_slab)
         if 2 * len(by_slab) < max_slab + 1:
             return None
-        k1, b_, avgdl = float(m["k1"]), float(m["b"]), float(m["avgdl"])
-        fkey = (k1, b_, avgdl)
         parts = []
         for t, rows_t in by_term.items():
             if t not in idf:
@@ -1470,25 +1560,8 @@ class SearchEngine:
             ent = self._decoded_cache.get(t)
             if ent is None or ent["rows"] is not rows_t:
                 return None  # not primed (e.g. race with eviction)
-            if ent["fac"] is None or ent["fkey"] != fkey:
-                from search_engine_spark.indexer.codec import (
-                    tf_norm_factor,
-                )
-
-                # same per-chunk tf_norm_factor floats the per-slab
-                # kernels compute, concatenated in the rows' order
-                fac_parts = [
-                    tf_norm_factor(
-                        r["_chunk"]._full[1], r["_chunk"]._full[2],
-                        k1, b_, avgdl,
-                    )
-                    for r in rows_t
-                ]
-                ent["fac"] = (
-                    fac_parts[0] if len(fac_parts) == 1
-                    else np.concatenate(fac_parts)
-                )
-                ent["fkey"] = fkey
+            # the same per-chunk tf_norm_factor floats the per-slab
+            # kernels use, concatenated in the rows' order at priming
             parts.append((ent["gids"], idf[t], ent["fac"]))
         ids, sc = fused_dense_topk(
             parts, (max_slab + 1) * ss, k, after=after,
@@ -1497,36 +1570,14 @@ class SearchEngine:
 
     def _run_slabs(self, by_slab: dict[int, list], score_one):
         """Run ``score_one(slab, rows) -> (ids, scores)`` over every
-        candidate slab and concatenate the per-slab top-k.
-
-        Slabs partition the docid space, so their kernels share no
-        state.  ``serving_threads > 1`` fans them out on a lazily
-        created thread pool — kept for a free-threaded future, but
-        DEFAULTED OFF because the kernel is GIL-bound and threads
-        measurably degrade latency (see __init__).  ``ex.map``
-        preserves submission order and the caller re-sorts by
-        (-score, docid), so the threaded result is BIT-IDENTICAL to
-        the serial loop (pinned in pytest)."""
-        items = list(by_slab.items())
-        nt = self.serving_threads or min(8, os.cpu_count() or 1)
+        candidate slab and concatenate the per-slab top-k.  Serial on
+        purpose: the kernel is a GIL-bound Python loop over small
+        numpy ops, and a per-slab thread pool measured monotonically
+        slower (1.09M docs, 6-term hot query: 1 thread 1,163 ms, 8
+        threads 7,081 ms)."""
         results: list[tuple[int, float]] = []
-        if nt <= 1 or len(items) <= 1:
-            for slab, rs in items:
-                ids, sc = score_one(slab, rs)
-                results.extend(zip(ids.tolist(), sc.tolist()))
-            return results
-        if self._serving_pool is None or self._serving_pool_size != nt:
-            from concurrent.futures import ThreadPoolExecutor
-
-            if self._serving_pool is not None:
-                self._serving_pool.shutdown(wait=False)
-            self._serving_pool = ThreadPoolExecutor(
-                max_workers=nt, thread_name_prefix="serve-slab"
-            )
-            self._serving_pool_size = nt
-        for ids, sc in self._serving_pool.map(
-            lambda it: score_one(*it), items
-        ):
+        for slab, rs in by_slab.items():
+            ids, sc = score_one(slab, rs)
             results.extend(zip(ids.tolist(), sc.tolist()))
         return results
 
@@ -2378,6 +2429,62 @@ class SearchEngine:
             cache[field] = arr
         return cache[field]
 
+    def _page_store(self):
+        """Per-generation page store: (sorted docids, table of the DTO
+        projection in the same order) — repo, path, commit, lang and
+        the plain snippet (query/highlight.plain_snippet_py), never
+        the full content.  Built by one column-pruned docmap scan,
+        batch by batch, so the content never becomes one table.
+        Both its cost and its size grow linearly with the corpus: it
+        holds ~300 B/doc for the whole generation (no byte budget),
+        and the scan reads all docmap content, paid by the first
+        ``execute_local`` after each ``refresh()``."""
+        if self._pages is None:
+            import numpy as np
+            import pyarrow as pa
+            import pyarrow.dataset as ds
+
+            from search_engine_spark.query.highlight import plain_snippet_py
+
+            dset = ds.dataset(
+                f"{self.index_dir}/docmap", partitioning="hive"
+            )
+            keep = ("docid", "repo", "path", "commit", "lang")
+            cols: dict[str, list] = {c: [] for c in (*keep, "snippet")}
+            for b in dset.to_batches(columns=[*keep, "content"]):
+                for c in keep:
+                    cols[c].append(b.column(c))
+                cols["snippet"].append(pa.array(
+                    [plain_snippet_py(t)
+                     for t in b.column("content").to_pylist()],
+                    pa.string(),
+                ))
+            types = {c: dset.schema.field(c).type for c in keep}
+            tab = pa.table({
+                c: pa.chunked_array(v, type=types.get(c, pa.string()))
+                for c, v in cols.items()
+            })
+            ids = tab.column("docid").to_numpy()
+            order = np.argsort(ids, kind="stable")
+            tab = tab.take(order).combine_chunks()
+            self._pages = (ids[order], tab)
+        return self._pages
+
+    def _page_rows(self, docids: list[int]) -> list[dict]:
+        """The page store's rows for ``docids``, in that order: one
+        searchsorted plus one take.  KeyError for a docid the docmap
+        does not hold."""
+        import numpy as np
+
+        ids, tab = self._page_store()
+        want = np.asarray(docids, dtype=np.int64)
+        pos = np.searchsorted(ids, want)
+        ok = pos < len(ids)
+        ok[ok] = ids[pos[ok]] == want[ok]
+        if not ok.all():
+            raise KeyError(int(want[~ok][0]))
+        return tab.take(pos).to_pylist()
+
     def mlt_weights(
         self, docid: int, max_terms: int = 25
     ) -> dict[str, float]:
@@ -2790,16 +2897,11 @@ class SearchEngine:
         """Single-term A7 fast path: the (term, slab) inventory's df
         column already counts distinct matching docs per slab
         (generation chunks within a slab cover disjoint docid ranges),
-        so the count is a driver-side pyarrow sum over the tiny
-        inventory — O(slabs the term occurs in), zero postings
-        decode."""
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-
-        tab = ds.dataset(f"{self.index_dir}/term_slabs").to_table(
-            filter=ds.field("term") == term, columns=["df"]
-        )
-        return int(pc.sum(tab.column("df")).as_py() or 0)
+        so the count is the term's df sum, which _slabs_for caches per
+        generation beside its slabs — zero postings decode, and no IO
+        for a warm term."""
+        self._slabs_for([term])
+        return self._term_df_sum[term]
 
     def count_matches(self, query: str) -> int:
         """A7 totalResults: exact count of docs matching >= 1 term.
@@ -3183,12 +3285,14 @@ class SearchEngine:
         85-103 + the doc-specified levenshtein fallback): the fixed
         misspelling maps apply first; any remaining term absent from
         the index is matched levenshtein<=2 against the top-df
-        ``dict_terms`` dictionary slice (length-band prefiltered).
+        ``dict_terms`` dictionary slice (a SpellingIndex: length band
+        plus character-count prefilter, built once per generation).
         Returns the corrected query, or None if nothing changed."""
         from search_engine_spark.config import TITLE_PREFIX
         from search_engine_spark.query.expansion import (
             EXTRA_MISSPELLINGS,
             MISSPELLINGS,
+            SpellingIndex,
             suggest_spelling,
         )
 
@@ -3214,7 +3318,7 @@ class SearchEngine:
                 # content terms and its boundary is deterministic.
                 from search_engine_spark.config import META_PREFIX
 
-                self._dym_dict = (dict_terms, {
+                self._dym_dict = (dict_terms, SpellingIndex(
                     r["term"]
                     for r in self.df_table.filter(
                         ~F.col("term").startswith(TITLE_PREFIX)
@@ -3224,7 +3328,7 @@ class SearchEngine:
                     .limit(dict_terms)
                     .select("term")
                     .collect()
-                })
+                ))
             sug = suggest_spelling(unknown, self._dym_dict[1])
             out = [sug.get(t, t) for t in out]
         return " ".join(out) if out != terms else None
@@ -3236,10 +3340,12 @@ class SearchEngine:
         semantics over the per-generation pyarrow vocabulary
         (_local_vocab_df — already content-namespace-filtered), with
         the dictionary slice cut by the same (df desc, term asc)
-        order.  Pinned equal to the Spark path in pytest."""
+        order into a SpellingIndex once per generation and
+        ``dict_terms``.  Pinned equal to the Spark path in pytest."""
         from search_engine_spark.query.expansion import (
             EXTRA_MISSPELLINGS,
             MISSPELLINGS,
+            SpellingIndex,
             suggest_spelling,
         )
 
@@ -3252,9 +3358,12 @@ class SearchEngine:
         unknown = [t for t in mapped if t not in vocab]
         out = list(mapped)
         if unknown:
-            top = sorted(vocab.items(), key=lambda kv: (-kv[1], kv[0]))
-            dictionary = {t for t, _ in top[:dict_terms]}
-            sug = suggest_spelling(unknown, dictionary)
+            if self._dym_local is None or self._dym_local[0] != dict_terms:
+                top = sorted(vocab.items(), key=lambda kv: (-kv[1], kv[0]))
+                self._dym_local = (dict_terms, SpellingIndex(
+                    t for t, _ in top[:dict_terms]
+                ))
+            sug = suggest_spelling(unknown, self._dym_local[1])
             out = [sug.get(t, t) for t in out]
         return " ".join(out) if out != terms else None
 

@@ -10,8 +10,8 @@ oracle can unroll the same loop exactly.
 Scale shape: edges pre-aggregated to (src, dst) distinct; the loop is
 join(ranks, edges on src) -> groupBy(dst).sum -> join full node set.
 On a cluster, ranks and edges co-partition on the join key across
-iterations; `checkpoint()` every ~5 iterations cuts lineage growth
-for long runs (not needed at 5 iters).
+iterations; a local checkpoint every ``TRUNCATE_EVERY`` iterations
+cuts lineage growth for long runs (not reached at 5 iters).
 """
 
 from __future__ import annotations
@@ -20,6 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.ops.params import PAGERANK_D, PAGERANK_ITERS
+
+# fixed-iteration pagerank truncates its lineage every this many
+# iterations (the contract's PAGERANK_ITERS loop never reaches it)
+TRUNCATE_EVERY = 10
 
 
 def pagerank(
@@ -41,7 +45,7 @@ def pagerank(
     # same join `iters` times (same arithmetic either way)
     edges_w = edges.join(outdeg, "src")
     ranks = nodes.withColumn("score", F.lit(1.0))
-    for _ in range(iters):
+    for i in range(iters):
         contribs = (
             ranks.join(edges_w, ranks.node == edges_w.src)
             .select(
@@ -60,6 +64,12 @@ def pagerank(
                 ).alias("score"),
             )
         )
+        if (i + 1) % TRUNCATE_EVERY == 0 and i + 1 < iters:
+            # each iteration nests two more joins in the plan; a long
+            # fixed loop (60 iterations) made a task whose lineage
+            # overflowed the executor thread's stack on deserialization,
+            # which kills a local-mode JVM
+            ranks = ranks.localCheckpoint(eager=True)
     if normalize:
         total = ranks.agg(F.sum("score").alias("t"))
         ranks = ranks.crossJoin(F.broadcast(total)).select(

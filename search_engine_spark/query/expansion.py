@@ -16,6 +16,8 @@ pruning bounds stay exact.
 
 from __future__ import annotations
 
+import numpy as np
+
 from search_engine_spark.tokenizer import py_tokenize, tokenize_query
 
 # Verbatim from QueryExpansionService.java:17-31 (SYNONYM_MAP), same
@@ -112,27 +114,99 @@ def field_weights(query: str, expand: bool = False) -> list[tuple]:
     return out
 
 
+# Count-vector columns of the spelling prefilter: the tokenizer's
+# [a-z0-9_] alphabet gets one column per character, every other
+# character shares one of _OTHER_COLS columns by code point.
+_ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789_"
+_OTHER_COLS = 27
+_WIDTH = len(_ALPHABET) + _OTHER_COLS
+_COL = np.array(
+    [_ALPHABET.index(chr(c)) if chr(c) in _ALPHABET
+     else len(_ALPHABET) + c % _OTHER_COLS for c in range(128)],
+    dtype=np.int64,
+)
+
+
+def _char_counts(terms: list[str]) -> np.ndarray:
+    """(len(terms), _WIDTH) uint8 character-count vectors, clipped at
+    255.  Clipping and column sharing only shrink the L1 distance
+    between two vectors, so it stays a lower bound (see SpellingIndex)."""
+    lens = np.fromiter((len(t) for t in terms), np.int64, len(terms))
+    cp = np.frombuffer("".join(terms).encode("utf-32-le"), dtype=np.uint32)
+    cp = cp.astype(np.int64)
+    col = np.where(
+        cp < 128, _COL[np.minimum(cp, 127)],
+        len(_ALPHABET) + cp % _OTHER_COLS,
+    )
+    row = np.repeat(np.arange(len(terms), dtype=np.int64), lens)
+    cnt = np.bincount(row * _WIDTH + col, minlength=len(terms) * _WIDTH)
+    return np.minimum(cnt, 255).astype(np.uint8).reshape(-1, _WIDTH)
+
+
+class SpellingIndex:
+    """A spelling dictionary laid out for nearest-term lookup.
+
+    Terms are kept ordered by (length, term) beside their character-
+    count vectors.  A lookup for ``t`` at distance ``max_dist`` reads
+    the contiguous length band ``|len - len(t)| <= max_dist``, then
+    keeps the terms whose count vector is within L1 ``2 * max_dist``
+    of ``t``'s: one edit changes the L1 distance between count vectors
+    by at most 2, so no term within ``max_dist`` edits is ever dropped.
+    Only the survivors pay the capped Levenshtein.  The result equals
+    the brute-force scan: the smallest term at the least distance
+    ``<= max_dist``.  Set-like: ``in``, ``len`` and iteration."""
+
+    def __init__(self, terms) -> None:
+        self._terms = sorted(set(terms), key=lambda t: (len(t), t))
+        self._set = frozenset(self._terms)
+        self._lens = np.fromiter(
+            (len(t) for t in self._terms), np.int64, len(self._terms)
+        )
+        self._counts = _char_counts(self._terms)
+
+    def __contains__(self, t) -> bool:
+        return t in self._set
+
+    def __len__(self) -> int:
+        return len(self._terms)
+
+    def __iter__(self):
+        return iter(self._terms)
+
+    def nearest(self, t: str, max_dist: int = 2) -> str | None:
+        n = len(t)
+        lo = int(np.searchsorted(self._lens, n - max_dist, "left"))
+        hi = int(np.searchsorted(self._lens, n + max_dist, "right"))
+        if lo >= hi:
+            return None
+        q = _char_counts([t])[0].astype(np.int16)
+        l1 = np.abs(self._counts[lo:hi].astype(np.int16) - q).sum(axis=1)
+        best, bd = None, max_dist + 1
+        for i in np.flatnonzero(l1 <= 2 * max_dist).tolist():
+            cand = self._terms[lo + i]
+            d = _levenshtein_capped(t, cand, max_dist)
+            if d < bd or (d == bd and best is not None and cand < best):
+                best, bd = cand, d
+        return best if bd <= max_dist else None
+
+
 def suggest_spelling(
-    terms: list[str], dictionary: set[str], max_dist: int = 2
+    terms: list[str], dictionary, max_dist: int = 2
 ) -> dict[str, str]:
     """Levenshtein-based suggestions against an index dictionary
     (doc-specified behavior; the engine's distributed form is
-    contract_ops.q_spell_suggest).  Pure-Python driver helper for
-    query-time use with a sampled dictionary."""
-    import difflib
-
+    contract_ops.q_spell_suggest): each term absent from the
+    dictionary maps to the smallest dictionary term at the least
+    distance ``<= max_dist``.  ``dictionary`` is a SpellingIndex (the
+    engine keeps one per generation) or any iterable of terms."""
+    if not isinstance(dictionary, SpellingIndex):
+        dictionary = SpellingIndex(dictionary)
     out: dict[str, str] = {}
     for t in terms:
         if t in dictionary:
             continue
-        best, bd = None, max_dist + 1
-        for cand in dictionary:
-            if abs(len(cand) - len(t)) > max_dist:
-                continue
-            d = _levenshtein_capped(t, cand, max_dist)
-            if d < bd or (d == bd and best is not None and cand < best):
-                best, bd = cand, d
-        if best is not None and bd <= max_dist:
+        best = dictionary.nearest(t, max_dist)
+        if best is not None:
             out[t] = best
     return out
 

@@ -92,6 +92,16 @@ def plain_snippet_col(text_col):
     )
 
 
+def plain_snippet_py(text: str | None) -> str | None:
+    """Python twin of ``plain_snippet_col`` for the serving tier.  The
+    greedy ``^([\\s\\S]{100,199}) `` match keeps everything before the
+    LAST space at character index 100..199, which is one ``rfind``."""
+    if text is None or len(text) <= 200:
+        return text
+    p = text.rfind(" ", 100, 200)
+    return (text[:p] if p >= 0 else text[:200]) + "..."
+
+
 def highlight_snippet_col(text_col, terms: list[str],
                           width: int = WIDTH, lead: int = LEAD):
     """Query-term-centered, <mark>-highlighted snippet column."""

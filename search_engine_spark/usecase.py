@@ -2,8 +2,9 @@
 
 `execute(request) -> response` mirrors the reference use case
 (SearchDocumentsUseCase.java:45-91) over the Spark engine: cache
-check (verbatim ``search:{q}:{page}:{size}:{sort}`` key, 30-minute
-TTL), repository page fetch honoring EVERY SearchRequestDTO param
+check (the reference's ``search:{q}:{page}:{size}:{sort}`` key,
+extended by every filter and the index generation; 30-minute TTL),
+repository page fetch honoring EVERY SearchRequestDTO param
 (query, page/size, sortBy relevance|date|pagerank, language, domain,
 dateFrom/dateTo, minContentQuality — SearchRequestDTO.java:16-24),
 total count, and the SearchResponseDTO mapping
@@ -40,7 +41,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from search_engine_spark.cache import SearchCache, search_key
+from search_engine_spark.cache import SearchCache
 from search_engine_spark.tokenizer import tokenize_query
 
 CACHE_TTL_SEC = 30 * 60.0  # CACHE_TTL_MINUTES = 30 (UseCase.java:26)
@@ -74,25 +75,41 @@ class GetSuggestionsUseCase:
         return [r["term"] for r in exp.select("term").collect()]
 
 
+def _copy_response(r: dict) -> dict:
+    """A response no later mutation can reach: fresh result dicts and
+    lists (every other value is immutable)."""
+    out = dict(r)
+    out["results"] = [
+        dict(x, highlightedTerms=list(x["highlightedTerms"]))
+        for x in r["results"]
+    ]
+    out["suggestions"] = list(r["suggestions"])
+    return out
+
+
 class SearchDocumentsUseCase:
     """execute(SearchRequestDTO) -> SearchResponseDTO over a
-    SearchEngine (the domain repository analog)."""
+    SearchEngine (the domain repository analog).
+
+    The response cache is keyed by a canonical encoding of every
+    request parameter but ``rank`` (query, page, size, sortBy,
+    language, domain, dateFrom, dateTo, minContentQuality), the path
+    (``execute`` / ``execute_local``) and the engine generation, which
+    ``refresh()`` bumps — so no filter, range or index change can be
+    answered from another request's page.  Requests carrying ``rank``
+    bypass the cache.  Responses are copied on put and on get."""
 
     def __init__(self, engine, cache: SearchCache | None = None):
         self.engine = engine
         self.cache = cache if cache is not None else SearchCache()
 
-    def execute(self, request: dict) -> dict:
-        t0 = time.time()
+    def _prepare(self, request: dict, path: str):
+        """Request -> (query, page, size, sortBy, search kwargs, cache
+        key or None)."""
         q = request["query"]
         page = int(request.get("page") or 0)
         size = int(request.get("size") or 10)
         sort_by = request.get("sortBy") or "relevance"
-        key = search_key(q, page, size, sort_by)
-        hit = self.cache.get(key)
-        if hit is not None:
-            return hit
-
         filters: dict = {}
         if request.get("language"):
             filters["lang"] = request["language"]
@@ -104,6 +121,42 @@ class SearchDocumentsUseCase:
             date_to=request.get("dateTo"),
             min_quality=request.get("minContentQuality"),
         )
+        key = None
+        if request.get("rank") is None:
+            key = "search:" + repr((
+                path, self.engine.generation, q, page, size, sort_by,
+                filters.get("lang"), filters.get("repo"),
+                kw["date_from"], kw["date_to"], kw["min_quality"],
+            ))
+        return q, page, size, sort_by, kw, key
+
+    def _cached(self, key):
+        hit = self.cache.get(key) if key is not None else None
+        return _copy_response(hit) if hit is not None else None
+
+    def _respond(self, t0, key, q, page, size, total, results, dym):
+        # did_you_mean returns the corrected query or None (nothing
+        # to suggest); the DTO carries a list either way
+        response = {
+            "query": q,
+            "totalResults": total,
+            "page": page,
+            "size": size,
+            "totalPages": int(math.ceil(total / size)) if size else 0,
+            "searchTimeMs": int((time.time() - t0) * 1000),
+            "results": results,
+            "suggestions": [dym] if dym else [],
+        }
+        if key is not None:
+            self.cache.put(key, _copy_response(response), CACHE_TTL_SEC)
+        return response
+
+    def execute(self, request: dict) -> dict:
+        t0 = time.time()
+        q, page, size, sort_by, kw, key = self._prepare(request, "spark")
+        hit = self._cached(key)
+        if hit is not None:
+            return hit
         n_fetch = (page + 1) * size
         if sort_by in ("relevance", "score"):
             hits = self.engine.search(q, n_fetch, **kw)
@@ -116,29 +169,15 @@ class SearchDocumentsUseCase:
 
         total = self.engine.count_matches(q)
         results = self._map_results(q, rows, request.get("rank"))
-        # did_you_mean returns the corrected query or None (nothing
-        # to suggest); the DTO carries a list either way
         dym = self.engine.did_you_mean(q) if total == 0 else None
-        suggestions = [dym] if dym else []
-        response = {
-            "query": q,
-            "totalResults": total,
-            "page": page,
-            "size": size,
-            "totalPages": int(math.ceil(total / size)) if size else 0,
-            "searchTimeMs": int((time.time() - t0) * 1000),
-            "results": results,
-            "suggestions": suggestions,
-        }
-        self.cache.put(key, response, CACHE_TTL_SEC)
-        return response
+        return self._respond(t0, key, q, page, size, total, results, dym)
 
     def execute_local(self, request: dict) -> dict:
         """Serving twin of ``execute`` — NO Spark job anywhere: hits
         via search_local / search_local_sorted, total via
-        count_matches_local, suggestions via did_you_mean_local,
-        metadata for the page via one row-group-pruned pyarrow docmap
-        read, the snippet via the python twin of plain_snippet_col.
+        count_matches_local, suggestions via did_you_mean_local, and
+        the page's metadata and snippets from the engine's
+        per-generation page store (one searchsorted + take).
         Identical responses to execute() (pinned in pytest) at
         serving-head latency — the shape a REST tier would run.
 
@@ -147,33 +186,15 @@ class SearchDocumentsUseCase:
         filters); ``rank`` here is a {docid: rank} dict, not a
         DataFrame."""
         t0 = time.time()
-        q = request["query"]
-        page = int(request.get("page") or 0)
-        size = int(request.get("size") or 10)
-        sort_by = request.get("sortBy") or "relevance"
-        key = search_key(q, page, size, sort_by) + ":local"
-        hit = self.cache.get(key)
+        q, page, size, sort_by, kw, key = self._prepare(request, "local")
+        hit = self._cached(key)
         if hit is not None:
             return hit
-        filters: dict = {}
-        if request.get("language"):
-            filters["lang"] = request["language"]
-        if request.get("domain"):
-            filters["repo"] = request["domain"]
-        kw = dict(
-            filter=filters or None,
-            date_from=request.get("dateFrom"),
-            date_to=request.get("dateTo"),
-            min_quality=request.get("minContentQuality"),
-        )
         n_fetch = (page + 1) * size
         if sort_by in ("relevance", "score"):
             hits = self.engine.search_local(q, n_fetch, **kw)
         else:
-            if filters or any(
-                request.get(x) is not None
-                for x in ("dateFrom", "dateTo", "minContentQuality")
-            ):
+            if any(v is not None for v in kw.values()):
                 raise NotImplementedError(
                     "sortBy date/pagerank with filters: use execute()"
                 )
@@ -187,37 +208,13 @@ class SearchDocumentsUseCase:
         total = self.engine.count_matches_local(q)
         results = self._map_results_local(q, rows, request.get("rank"))
         dym = self.engine.did_you_mean_local(q) if total == 0 else None
-        response = {
-            "query": q,
-            "totalResults": total,
-            "page": page,
-            "size": size,
-            "totalPages": int(math.ceil(total / size)) if size else 0,
-            "searchTimeMs": int((time.time() - t0) * 1000),
-            "results": results,
-            "suggestions": [dym] if dym else [],
-        }
-        self.cache.put(key, response, CACHE_TTL_SEC)
-        return response
-
-    @staticmethod
-    def _py_snippet(text: str) -> str:
-        """Python twin of query/highlight.plain_snippet_col — same
-        rule, same boundaries (pinned via execute_local == execute)."""
-        import re
-
-        if len(text) <= 200:
-            return text
-        sub = text[:200]
-        m = re.match(r"^([\s\S]{100,199}) ", sub)
-        return (m.group(1) if m else sub) + "..."
+        return self._respond(t0, key, q, page, size, total, results, dym)
 
     def _map_results_local(self, q: str, rows, rank):
-        """No-Spark DTO mapping: one pyarrow docmap read filtered to
-        the page's docids (row-group pruned — docmap is docid-ordered)
-        instead of a Spark join."""
-        import pyarrow.dataset as ds
-
+        """No-Spark DTO mapping from the engine's per-generation page
+        store (SearchEngine._page_store: the docmap's DTO projection,
+        snippet included, read once per generation) instead of a
+        Spark join."""
         from search_engine_spark.ops.ranking import (
             PUBLISH_EPOCH,
             PUBLISH_RANGE_DAYS,
@@ -225,28 +222,18 @@ class SearchDocumentsUseCase:
 
         if not rows:
             return []
-        ids = [int(d) for d, _ in rows]
-        tab = ds.dataset(
-            f"{self.engine.index_dir}/docmap", partitioning="hive"
-        ).to_table(
-            filter=ds.field("docid").isin(ids),
-            columns=["docid", "repo", "path", "commit", "lang", "content"],
-        )
-        by_id = {
-            int(r["docid"]): r for r in tab.to_pylist()
-        }
+        metas = self.engine._page_rows([int(d) for d, _ in rows])
         epoch = datetime.date.fromisoformat(PUBLISH_EPOCH)
         terms = tokenize_query(q)
         rank_map = rank or {}
         out = []
-        for d, s in rows:
-            m = by_id[int(d)]
+        for (d, s), m in zip(rows, metas):
             day = (int(d) * 16807) % PUBLISH_RANGE_DAYS
             out.append(
                 {
                     "url": f"{m['repo']}/{m['path']}@{m['commit']}",
                     "title": m["path"].rsplit("/", 1)[-1],
-                    "snippet": self._py_snippet(m["content"]),
+                    "snippet": m["snippet"],
                     "relevanceScore": float(s),
                     "pagerankScore": float(rank_map.get(int(d), 0.0)),
                     "language": m["lang"],

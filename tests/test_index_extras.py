@@ -194,31 +194,6 @@ def test_iceberg_exists_and_drop(spark, tmp_path):
     assert s.exists("docmap", spark) is False
 
 
-# --- threaded serving head (round 5) ---------------------------------------
-
-def test_serving_threads_parity(engine):
-    """The per-slab thread pool must be BIT-identical to the serial
-    loop across all three no-Spark serving paths: same kernels, same
-    submission order, same (-score, docid) merge sort."""
-    queries = ["merge buffer", "java search parse token", "parseToken",
-               "zzznosuchterm", "java merge table row scan buffer"]
-    for q in queries:
-        engine.serving_threads = 1
-        serial = engine.search_local(q, 10)
-        engine.serving_threads = 4
-        threaded = engine.search_local(q, 10)
-        assert threaded == serial
-        engine.serving_threads = 1
-        serial_f = engine.search_local_fields(q, 10)
-        serial_a = engine.search_local_advanced(q, 10)
-        engine.serving_threads = 4
-        assert engine.search_local_fields(q, 10) == serial_f
-        assert engine.search_local_advanced(q, 10) == serial_a
-    # pool is reused across queries and resized on demand
-    assert engine._serving_pool is not None
-    engine.serving_threads = 1  # restore the (serial) default
-
-
 # --- Zipf hot-term salting bound (round 5) ----------------------------------
 
 def test_hot_term_groups_bounded(spark, tmp_path_factory):

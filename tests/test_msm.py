@@ -98,6 +98,41 @@ def test_msm_percentage_and_parse():
         _msm_count("two", 4)
 
 
+def test_msm_integer_strings():
+    """ES accepts the integer forms as strings too."""
+    assert _msm_count("2", 4) == 2
+    assert _msm_count("3", 4) == 3
+    assert _msm_count(" 3 ", 4) == 3
+    assert _msm_count("+3", 4) == 3
+    assert _msm_count("-1", 4) == 3
+    assert _msm_count("-3", 4) == 0  # 4-3 = 1 -> plain OR
+    assert _msm_count("1", 4) == 0
+    assert _msm_count("9", 4) == 9  # more than n: nothing matches
+    for v in range(-6, 7):
+        assert _msm_count(str(v), 5) == _msm_count(v, 5), v
+
+
+@pytest.mark.parametrize("combo", ["3<90%", "2<-25%", "3<-1 5<50%"])
+def test_msm_combination_form_unsupported(combo):
+    with pytest.raises(ValueError, match="combination"):
+        _msm_count(combo, 4)
+
+
+@pytest.mark.parametrize("bad", ["", "%", "2.5", "1e2", "2 %", "--1", "٣"])
+def test_msm_malformed_strings_raise(bad):
+    with pytest.raises(ValueError, match="minimum_should_match"):
+        _msm_count(bad, 4)
+
+
+def test_msm_string_end_to_end(engine):
+    assert engine.search_local(QUERY, 10, min_should_match="2") == (
+        engine.search_local(QUERY, 10, min_should_match=2)
+    )
+    assert engine.search_local(QUERY, 10, min_should_match="-1") == (
+        engine.search_local(QUERY, 10, min_should_match=3)
+    )
+
+
 def test_msm_negative_forms_end_to_end(engine):
     got_neg = [
         (r["docid"], r["score"])

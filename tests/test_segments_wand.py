@@ -264,9 +264,27 @@ def test_decoded_postings_cache_parity_and_eviction(engine, oracle):
     for q in queries:  # priming pass
         assert engine.search_local(q, 10) == base[q]
     assert engine._decoded_cache and engine._decoded_nbytes > 0
+    from search_engine_spark.indexer.codec import tf_norm_factor
+
+    m = engine.meta
+    fkey = (float(m["k1"]), float(m["b"]), float(m["avgdl"]))
     for ent in engine._decoded_cache.values():
         assert ent["nb"] > 0 and len(ent["gids"])
         assert all(r["_chunk"]._full is not None for r in ent["rows"])
+        # priming fills every chunk's factor memo as a view of the
+        # term's fused factor array, with the floats a fresh
+        # computation gives (bit for bit)
+        assert len(ent["fac"]) == len(ent["gids"])
+        off = 0
+        for r in ent["rows"]:
+            c = r["_chunk"]
+            key, fac = c._fnorm
+            assert key == fkey
+            want = tf_norm_factor(c._full[1], c._full[2], *fkey)
+            assert fac.tobytes() == want.tobytes()
+            assert fac.base is ent["fac"] or len(ent["rows"]) == 1
+            assert (ent["fac"][off:off + len(fac)] == fac).all()
+            off += len(fac)
     for q in queries:  # warm pass: scored from the decoded arrays
         assert engine.search_local(q, 10) == base[q]
     # a 1-byte budget forces eviction down to the newest term; results

@@ -81,9 +81,50 @@ def test_cache_flow(engine):
     assert (uc.cache.hits, uc.cache.misses) == (0, 1)
     r2 = uc.execute({"query": QUERY, "page": 0, "size": 5})
     assert (uc.cache.hits, uc.cache.misses) == (1, 1)
-    assert r2 is r1  # served from cache, key = query:page:size:sort
+    # served from cache, as an equal copy: neither the caller of the
+    # miss nor the caller of the hit can reach the cached response
+    assert r2 == r1 and r2 is not r1
+    r1["results"][0]["highlightedTerms"].append("x")
+    r2["suggestions"].append("x")
+    r4 = uc.execute({"query": QUERY, "page": 0, "size": 5})
+    assert (uc.cache.hits, uc.cache.misses) == (2, 1)
+    assert r4["results"][0]["highlightedTerms"] == ["query", "parse", "buffer"]
+    assert r4["suggestions"] == []
     r3 = uc.execute({"query": QUERY, "page": 1, "size": 5})
-    assert r3 is not r1  # different page = different key
+    assert r3 != r1  # different page = different key
+    assert (uc.cache.hits, uc.cache.misses) == (2, 2)
+
+
+@pytest.mark.parametrize("method", ["execute", "execute_local"])
+def test_cache_key_carries_filters(engine, oracle, method):
+    """A filtered request after the same unfiltered one is answered
+    for its own filters, never from the unfiltered page."""
+    uc = SearchDocumentsUseCase(engine)
+    run = getattr(uc, method)
+    base = {"query": QUERY, "size": 10}
+    langs = {d["docid"]: d["lang"] for d in oracle.docmap}
+    lang = langs[oracle.search(QUERY, 1)[0][0]]
+    unfiltered = run(dict(base))
+    assert {r["language"] for r in unfiltered["results"]} != {lang}
+    for extra in ({"language": lang}, {"dateFrom": 100, "dateTo": 2000}):
+        got = run(dict(base, **extra))
+        want = getattr(SearchDocumentsUseCase(engine), method)(
+            dict(base, **extra)
+        )
+        got.pop("searchTimeMs"), want.pop("searchTimeMs")
+        assert got == want, extra
+    assert all(
+        r["language"] == lang
+        for r in run(dict(base, language=lang))["results"]
+    )
+
+
+def test_rank_requests_bypass_cache(engine):
+    uc = SearchDocumentsUseCase(engine)
+    req = {"query": QUERY, "size": 5, "rank": {}}
+    uc.execute_local(dict(req))
+    uc.execute_local(dict(req))
+    assert (uc.cache.hits, uc.cache.misses, len(uc.cache)) == (0, 0, 0)
 
 
 def test_filters_and_ranges_apply(usecase, engine, oracle):
@@ -163,21 +204,142 @@ REQUESTS = [
 ]
 
 
+def _assert_twins(engine, req):
+    """execute and execute_local give the same response, searchTimeMs
+    aside and scores to 1e-12.  Returns the local response."""
+    a = SearchDocumentsUseCase(engine).execute(dict(req))
+    b = SearchDocumentsUseCase(engine).execute_local(dict(req))
+    assert [r["relevanceScore"] for r in a["results"]] == pytest.approx(
+        [r["relevanceScore"] for r in b["results"]], rel=1e-12
+    )
+
+    def strip(resp):
+        return dict(resp, searchTimeMs=None, results=[
+            dict(r, relevanceScore=None) for r in resp["results"]
+        ])
+
+    assert strip(a) == strip(b), req
+    return b
+
+
 @pytest.mark.parametrize("req", REQUESTS)
 def test_execute_local_identity(engine, req):
     """The no-Spark execute twin returns the IDENTICAL response
     (searchTimeMs aside) for every request shape — incl. the python
-    snippet twin, the pyarrow metadata read, count_matches_local and
-    the date-sorted path."""
-    a = SearchDocumentsUseCase(engine).execute(dict(req))
-    b = SearchDocumentsUseCase(engine).execute_local(dict(req))
-    a.pop("searchTimeMs"), b.pop("searchTimeMs")
-    for ra, rb in zip(a["results"], b["results"]):
-        assert ra["relevanceScore"] == pytest.approx(
-            rb["relevanceScore"], rel=1e-12
+    snippet twin, the page store, count_matches_local and the
+    date-sorted path."""
+    _assert_twins(engine, req)
+
+
+def test_execute_local_identity_through_lifecycle(spark, tmp_path):
+    """execute_local == execute for every REQUESTS shape after deletes
+    and after an append, each followed by refresh(): the page store
+    and the spelling index follow the index generation (the append
+    adds the word the zero-hit request is one edit from, so its
+    suggestion changes).  A use case that cached pages before the
+    delete answers for the new generation after it."""
+    from search_engine_spark.indexer.build import (
+        append_documents,
+        delete_documents,
+    )
+
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus_df(spark, N_DOCS, partitions=8), d, CFG)
+    eng = SearchEngine(spark, d)
+    uc = SearchDocumentsUseCase(eng)
+    for req in REQUESTS:  # cache every page of the first generation
+        uc.execute_local(dict(req))
+    uc.execute(dict(REQUESTS[0]))
+    top = [doc for doc, _ in eng.search_local(QUERY, 3)]
+    gone = {
+        f"{m['repo']}/{m['path']}@{m['commit']}" for m in eng._page_rows(top)
+    }
+    delete_documents(spark, eng.index_dir, docids=top)
+    eng.refresh()
+    for req in REQUESTS:
+        got = _assert_twins(eng, req)
+        assert not gone & {r["url"] for r in got["results"]}, req
+        a = uc.execute_local(dict(req))
+        b = SearchDocumentsUseCase(eng).execute_local(dict(req))
+        a.pop("searchTimeMs"), b.pop("searchTimeMs")
+        assert a == b, req
+    assert not gone & {
+        r["url"] for r in uc.execute(dict(REQUESTS[0]))["results"]
+    }
+    new = spark.createDataFrame(
+        [
+            ("zz/new", f"src/new{i}.py", "c0ffee", "python",
+             f"zzznosuchwords query parse buffer {'filler ' * (30 + i)}")
+            for i in range(3)
+        ],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    assert append_documents(spark, eng.index_dir, new)["n_new"] == 3
+    eng.refresh()
+    after = [_assert_twins(eng, req) for req in REQUESTS]
+    zero = next(r for r in after if r["query"] == "zzznosuchword")
+    assert zero["suggestions"] == ["zzznosuchwords"]
+    hits = _assert_twins(eng, {"query": "zzznosuchwords", "size": 5})
+    assert sorted(r["url"] for r in hits["results"]) == [
+        f"zz/new/src/new{i}.py@c0ffee" for i in range(3)
+    ]
+
+
+SNIPPET_TEXTS = [
+    "snipword " + "a" * 190,                       # 199 chars
+    "snipword " + "a" * 191,                       # 200: kept whole
+    "snipword " + "a" * 192,                       # 201: cut, no space
+    "snipword " + "b" * 90 + " " + "c" * 150,      # space at index 99
+    "snipword " + "b" * 91 + " " + "c" * 150,      # space at index 100
+    "snipword " + "d" * 189 + " " + "e" * 30,      # space at index 198
+    "snipword " + "d" * 190 + " " + "e" * 30,      # space at index 199
+    "snipword " + "d" * 191 + " " + "e" * 30,      # space at index 200
+    "snipword " + ("déjà vu " * 40),               # 2-byte UTF-8
+    "snipword " + ("中文字符 " * 60),               # 3-byte UTF-8
+    "snipword " + ("ok😀 " * 60),                  # 4-byte / surrogates
+    "snipword " + "é" * 191,                       # 200 non-ASCII chars
+    "snipword " + "é" * 192,                       # 201 non-ASCII chars
+]
+
+
+def test_snippet_identity_at_boundaries(spark, tmp_path):
+    """The page store's snippets equal the Spark plain_snippet_col
+    rule at the 200-character boundary and on non-ASCII content, both
+    for the bare rule and through execute vs execute_local."""
+    from search_engine_spark.query.highlight import (
+        plain_snippet_col,
+        plain_snippet_py,
+    )
+
+    want = [
+        r["s"]
+        for r in spark.createDataFrame(
+            [(i, t) for i, t in enumerate(SNIPPET_TEXTS)],
+            "i int, content string",
         )
-        ra.pop("relevanceScore"), rb.pop("relevanceScore")
-    assert a == b
+        .select("i", plain_snippet_col("content").alias("s"))
+        .orderBy("i")
+        .collect()
+    ]
+    assert [plain_snippet_py(t) for t in SNIPPET_TEXTS] == want
+    assert [len(s) for s in want[:3]] == [199, 200, 203]
+    d = str(tmp_path / "snip")
+    docs = spark.createDataFrame(
+        [
+            ("snip/repo", f"f{i}.txt", "abc", "text", t)
+            for i, t in enumerate(SNIPPET_TEXTS)
+        ],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    build_index(spark, docs, d, CFG)
+    eng = SearchEngine(spark, d)
+    got = _assert_twins(eng, {"query": "snipword", "size": 20})
+    by_title = {r["title"]: r["snippet"] for r in got["results"]}
+    assert by_title == {
+        f"f{i}.txt": w for i, w in enumerate(want)
+    }
 
 
 def test_count_matches_local_identity(engine):
