@@ -360,6 +360,57 @@ def _wand_index(spark, sf_dir):
     return _CACHE[key]
 
 
+def _wand_stats(spark, sf_dir):
+    """Field statistics of the in-memory index: each field is encoded
+    with its own avgdl, so block-max bounds need no scaling."""
+    _segments, _dfs, _n, avgdl, avgdl_title = _wand_index(spark, sf_dir)
+    return (avgdl, 1.0), (avgdl_title, 1.0)
+
+
+def _wand_plan_segments(spark, sf_dir, plan) -> DataFrame:
+    """The plan's segment rows joined to its idf table — the engine's
+    Spark executor join (query/plan.plan_idf_table) over the
+    in-memory index."""
+    from search_engine_spark.query.plan import plan_idf_table
+
+    segments, dfs, n_docs, _avgdl, _avgdl_t = _wand_index(spark, sf_dir)
+    idfs = plan_idf_table(spark, dfs, {None: plan}, n_docs)
+    return (
+        segments.filter(F.col("term").isin(sorted({r[0] for r in plan.rows})))
+        .select("slab", "term", "postings", "skips", "block_max")
+        .join(F.broadcast(idfs), "term")
+    )
+
+
+def _wand_topk(seg: DataFrame, plan, k: int, pr=None, **kw) -> DataFrame:
+    """Per-slab top-k of ``seg`` through the engine's scorer factory,
+    then the global (score desc, docid asc) cut.  ``pr`` (docid, pr,
+    slab) cogroups the function_score boost; ``kw`` carries the
+    scorer's ``after`` / ``n_filter_groups``."""
+    from search_engine_spark.config import EngineConfig
+    from search_engine_spark.query.advanced import PAGERANK_FACTOR
+    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+
+    cfg = EngineConfig(**_WAND_CFG)
+    scorer = make_slab_scorer(
+        cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b,
+        {None: (plan.n_required, plan.dis_max)},
+        pagerank=None if pr is None else (PAGERANK_FACTOR, 0.0), **kw,
+    )
+    g = seg.groupBy("slab")
+    per = (
+        g.applyInPandas(scorer, schema=TOPK_SCHEMA) if pr is None
+        else g.cogroup(pr.groupBy("slab")).applyInPandas(
+            scorer, schema=TOPK_SCHEMA
+        )
+    )
+    return per.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+
+
+def _rounded(df: DataFrame) -> DataFrame:
+    return df.select("docid", F.round("score", 4).alias("score"))
+
+
 def q_bm25_wand(
     spark, sf_dir, query: str, k: int = 10, mode: str = "or",
     msm: int = 0,
@@ -370,41 +421,17 @@ def q_bm25_wand(
     ``mode="and"`` is conjunctive (ES bool.must / SURVEY J4);
     ``msm`` is ES minimum_should_match (docs matching at least msm
     distinct terms; the kernel's n_required m-of-n counting)."""
-    from search_engine_spark.config import EngineConfig
-    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+    from search_engine_spark.query.plan import plain_plan
 
     terms = tokenize_query(query)
     if not terms:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, _ = _wand_index(spark, sf_dir)
-
-    idfs = (
-        dfs.filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf")
+    plan = plain_plan(
+        {t: 1.0 for t in terms}, _wand_stats(spark, sf_dir),
+        len(terms) if mode == "and" else int(msm),
     )
-    seg = segments.filter(F.col("term").isin(terms)).select(
-        "slab", "term", "postings", "skips", "block_max"
-    )
-    scorer = make_slab_scorer(
-        cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b, avgdl,
-        n_required=len(terms) if mode == "and" else int(msm),
-    )
-    per = (
-        seg.join(F.broadcast(idfs), "term")
-        .groupBy("slab")
-        .applyInPandas(scorer, schema=TOPK_SCHEMA)
-    )
-    return (
-        per.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", F.round("score", 4).alias("score"))
+    return _rounded(
+        _wand_topk(_wand_plan_segments(spark, sf_dir, plan), plan, k)
     )
 
 
@@ -434,49 +461,21 @@ def q_bm25_not(
     before the running top-k so WAND pruning stays exact.  Reference:
     the ES adapter issues bool queries (SURVEY J4's family); must_not
     is the standard third clause."""
-    from search_engine_spark.config import EngineConfig
-    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+    from search_engine_spark.query.plan import plain_plan
 
     terms = tokenize_query(query)
     nterms = tokenize_query(exclude)
     if not terms:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, _ = _wand_index(spark, sf_dir)
-    idfs = (
-        dfs.filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf")
+    segments = _wand_index(spark, sf_dir)[0]
+    plan = plain_plan({t: 1.0 for t in terms}, _wand_stats(spark, sf_dir))
+    neg = segments.filter(F.col("term").isin(nterms)).select(
+        "slab", "term", "postings", "skips", "block_max"
     )
-    cols = ["slab", "term", "idf", "postings", "skips", "block_max"]
-    pos = (
-        segments.filter(F.col("term").isin(terms))
-        .join(F.broadcast(idfs), "term")
-        .select(*cols)
+    seg = _wand_plan_segments(spark, sf_dir, plan).unionByName(
+        neg, allowMissingColumns=True
     )
-    neg = (
-        segments.filter(F.col("term").isin(nterms))
-        .withColumn("idf", F.lit(None).cast("double"))
-        .select(*cols)
-    )
-    scorer = make_slab_scorer(
-        cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b, avgdl
-    )
-    per = (
-        pos.unionByName(neg)
-        .groupBy("slab")
-        .applyInPandas(scorer, schema=TOPK_SCHEMA)
-    )
-    return (
-        per.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", F.round("score", 4).alias("score"))
-    )
+    return _rounded(_wand_topk(seg, plan, k))
 
 
 def q_bm25_fuzzy_wand(
@@ -494,15 +493,14 @@ def q_bm25_fuzzy_wand(
     pruning bounds stay exact.  Oracle: sqlgen.bm25_fuzzy_sql(dedup=
     True), which recomputes the same expansion over the deduped
     vocabulary in SQL."""
-    from search_engine_spark.config import TITLE_PREFIX, EngineConfig
+    from search_engine_spark.config import TITLE_PREFIX
     from search_engine_spark.query.fuzzy import fuzzy_expansions
-    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+    from search_engine_spark.query.plan import plain_plan
 
     terms = tokenize_query(query)
     if not terms:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, _ = _wand_index(spark, sf_dir)
+    dfs = _wand_index(spark, sf_dir)[1]
     vocab = dfs.filter(
         ~F.col("term").startswith(TITLE_PREFIX)
     ).select("term", "df")
@@ -516,36 +514,9 @@ def q_bm25_fuzzy_wand(
         weights[t] = weights.get(t, 0.0) + b
     if not weights:
         return spark.createDataFrame([], "docid long, score double")
-    wterms = list(weights)
-    wmap = F.create_map(
-        *[F.lit(x) for t, w in weights.items() for x in (t, float(w))]
-    )
-    idfs = (
-        dfs.filter(F.col("term").isin(wterms))
-        .withColumn(
-            "idf",
-            wmap[F.col("term")]
-            * F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf")
-    )
-    seg = segments.filter(F.col("term").isin(wterms)).select(
-        "slab", "term", "postings", "skips", "block_max"
-    )
-    scorer = make_slab_scorer(
-        cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b, avgdl
-    )
-    per = (
-        seg.join(F.broadcast(idfs), "term")
-        .groupBy("slab")
-        .applyInPandas(scorer, schema=TOPK_SCHEMA)
-    )
-    return (
-        per.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", F.round("score", 4).alias("score"))
+    plan = plain_plan(weights, _wand_stats(spark, sf_dir))
+    return _rounded(
+        _wand_topk(_wand_plan_segments(spark, sf_dir, plan), plan, k)
     )
 
 
@@ -556,51 +527,13 @@ def q_bm25_fields(
     content^0.8 when ``expand``) through the real index path, with
     per-field df/avgdl/block-max stats.  DuckDB twin:
     sqlgen.bm25_fields_sql."""
-    from search_engine_spark.config import TITLE_PREFIX, EngineConfig
-    from search_engine_spark.query.expansion import field_weights
-    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+    from search_engine_spark.query.plan import fields_plan
 
-    fw = field_weights(query, expand=expand)
-    if not fw:
+    plan = fields_plan(query, _wand_stats(spark, sf_dir), expand)
+    if not plan.rows:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, avgdl_title = _wand_index(spark, sf_dir)
-
-    rows = []
-    for t, w_c, w_t in fw:
-        rows.append((t, float(w_c), avgdl, 1.0))
-        rows.append((TITLE_PREFIX + t, float(w_t), avgdl_title, 1.0))
-    terms = [r[0] for r in rows]
-    wdf = spark.createDataFrame(
-        rows, "term string, w double, avgdl double, bscale double"
-    )
-    idfs = (
-        dfs.filter(F.col("term").isin(terms))
-        .join(F.broadcast(wdf), "term")
-        .withColumn(
-            "idf",
-            F.col("w")
-            * F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf", "avgdl", "bscale")
-    )
-    seg = segments.filter(F.col("term").isin(terms)).select(
-        "slab", "term", "postings", "skips", "block_max"
-    )
-    scorer = make_slab_scorer(
-        cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b, avgdl
-    )
-    per = (
-        seg.join(F.broadcast(idfs), "term")
-        .groupBy("slab")
-        .applyInPandas(scorer, schema=TOPK_SCHEMA)
-    )
-    return (
-        per.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", F.round("score", 4).alias("score"))
+    return _rounded(
+        _wand_topk(_wand_plan_segments(spark, sf_dir, plan), plan, k)
     )
 
 
@@ -620,72 +553,21 @@ def q_bm25_full(spark, sf_dir, query: str, k: int = 10) -> DataFrame:
     function_score MULTIPLY log1p(2 * pagerank) applied INSIDE the
     per-slab WAND stage (per-block boost maxima keep pruning exact).
     DuckDB twin: sqlgen.bm25_full_sql."""
-    from search_engine_spark.config import TITLE_PREFIX, EngineConfig
-    from search_engine_spark.query.advanced import (
-        FLD_CONTENT,
-        PAGERANK_FACTOR,
-        advanced_plan,
-    )
-    from search_engine_spark.query.wand import (
-        TOPK_SCHEMA,
-        make_adv_slab_scorer,
-    )
+    from search_engine_spark.config import EngineConfig
+    from search_engine_spark.query.plan import composed_plan
 
-    plan = advanced_plan(query)
-    if not plan:
+    plan = composed_plan(query, _wand_stats(spark, sf_dir))
+    if not plan.rows:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, avgdl_title = _wand_index(spark, sf_dir)
-
-    rows = []
-    for clause, fld, t, w in plan:
-        if fld == FLD_CONTENT:
-            rows.append((t, float(w), avgdl, 1.0, clause, 0, -1))
-        else:
-            rows.append(
-                (TITLE_PREFIX + t, float(w), avgdl_title, 1.0, clause, 1, -1)
-            )
-    terms = [r[0] for r in rows]
-    wdf = spark.createDataFrame(
-        rows,
-        "term string, w double, avgdl double, bscale double, "
-        "clause int, fld int, req int",
-    )
-    idfs = (
-        dfs.filter(F.col("term").isin(terms))
-        .join(F.broadcast(wdf), "term")
-        .withColumn(
-            "idf",
-            F.col("w")
-            * F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf", "avgdl", "bscale", "clause", "fld", "req")
-    )
-    seg = segments.filter(F.col("term").isin(terms)).select(
-        "slab", "term", "postings", "skips", "block_max"
-    )
-    joined = seg.join(F.broadcast(idfs), "term")
+    slab_size = EngineConfig(**_WAND_CFG).slab_size
     pr = (
         load(spark, sf_dir, "documents")
         .select(F.col("doc_id").cast("long").alias("docid"))
         .withColumn("pr", F.expr(PR_EXPR_TMPL.format(c="docid")))
-        .withColumn("slab", (F.col("docid") / cfg.slab_size).cast("int"))
+        .withColumn("slab", (F.col("docid") / slab_size).cast("int"))
     )
-    scorer = make_adv_slab_scorer(
-        cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b, PAGERANK_FACTOR
-    )
-    per = (
-        joined.groupBy("slab")
-        .cogroup(pr.groupBy("slab"))
-        .applyInPandas(scorer, schema=TOPK_SCHEMA)
-    )
-    return (
-        per.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", F.round("score", 4).alias("score"))
-    )
+    seg = _wand_plan_segments(spark, sf_dir, plan)
+    return _rounded(_wand_topk(seg, plan, k, pr=pr))
 
 
 def q_highlight(spark, sf_dir, query: str, limit: int = 100) -> DataFrame:
@@ -800,45 +682,22 @@ def q_bm25_after(spark, sf_dir, query: str, k: int = 10) -> DataFrame:
     Reference: the ES adapter pages via Pagination from/size
     (Pagination.java:16-27); search_after is the ES-documented
     replacement for deep pages, an extension here."""
-    from search_engine_spark.config import EngineConfig
-    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+    from search_engine_spark.query.plan import plain_plan
 
     terms = tokenize_query(query)
     if not terms:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, _ = _wand_index(spark, sf_dir)
-    idfs = (
-        dfs.filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf")
-    )
-    seg = (
-        segments.filter(F.col("term").isin(terms))
-        .select("slab", "term", "postings", "skips", "block_max")
-        .join(F.broadcast(idfs), "term")
-    )
+    plan = plain_plan({t: 1.0 for t in terms}, _wand_stats(spark, sf_dir))
+    seg = _wand_plan_segments(spark, sf_dir, plan)
 
     def topk(after):
-        scorer = make_slab_scorer(
-            cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b, avgdl,
-            after=after,
-        )
-        per = seg.groupBy("slab").applyInPandas(scorer, schema=TOPK_SCHEMA)
-        return per.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        return _wand_topk(seg, plan, k, after=after)
 
     page1 = topk(None).collect()  # k rows — the scalar cursor source
     if len(page1) < k:
         return spark.createDataFrame([], "docid long, score double")
     cursor = (float(page1[-1]["score"]), int(page1[-1]["docid"]))
-    return topk(cursor).select(
-        "docid", F.round("score", 4).alias("score")
-    )
+    return _rounded(topk(cursor))
 
 
 def q_bm25_deleted(spark, sf_dir, query: str, k: int = 10) -> DataFrame:
@@ -853,36 +712,16 @@ def q_bm25_deleted(spark, sf_dir, query: str, k: int = 10) -> DataFrame:
     argument); the DuckDB twin deletes the same ranks from its own
     ranking, so the compare gates the masked-ranking invariant
     itself."""
-    from search_engine_spark.config import EngineConfig
-    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+    from search_engine_spark.query.plan import plain_plan
 
     terms = tokenize_query(query)
     if not terms:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, _ = _wand_index(spark, sf_dir)
-    idfs = (
-        dfs.filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf")
-    )
-    seg = (
-        segments.filter(F.col("term").isin(terms))
-        .select("slab", "term", "postings", "skips", "block_max")
-        .join(F.broadcast(idfs), "term")
-    )
+    plan = plain_plan({t: 1.0 for t in terms}, _wand_stats(spark, sf_dir))
+    seg = _wand_plan_segments(spark, sf_dir, plan)
 
     def topk(kk):
-        scorer = make_slab_scorer(
-            cfg.slab_size, cfg.block_size, kk, cfg.k1, cfg.b, avgdl
-        )
-        per = seg.groupBy("slab").applyInPandas(scorer, schema=TOPK_SCHEMA)
-        return per.orderBy(F.desc("score"), F.asc("docid")).limit(kk)
+        return _wand_topk(seg, plan, kk)
 
     base = topk(6).collect()
     victims = [int(base[i]["docid"]) for i in (0, 2, 4) if i < len(base)]
@@ -1112,42 +951,18 @@ def q_bm25_range_wand(
     oracle gates the raw-admission kernel branch itself."""
     from search_engine_spark.config import EngineConfig
     from search_engine_spark.engine import pack_admission_rows
-    from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
+    from search_engine_spark.query.plan import plain_plan
 
     terms = tokenize_query(query)
     if not terms:
         return spark.createDataFrame([], "docid long, score double")
-    cfg = EngineConfig(**_WAND_CFG)
-    segments, dfs, n_docs, avgdl, _ = _wand_index(spark, sf_dir)
-    idfs = (
-        dfs.filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "idf")
-    )
-    seg = (
-        segments.filter(F.col("term").isin(terms))
-        .select("slab", "term", "postings", "skips", "block_max")
-        .join(F.broadcast(idfs), "term")
-        .withColumn("inc", F.lit(None).cast("int"))
-    )
+    plan = plain_plan({t: 1.0 for t in terms}, _wand_stats(spark, sf_dir))
     adm = _range_admissible(spark, sf_dir, day_from, day_to, min_quality)
-    rseg = pack_admission_rows(adm, cfg.slab_size, 0)
-    seg = seg.unionByName(rseg.select(*seg.columns))
-    scorer = make_slab_scorer(
-        cfg.slab_size, cfg.block_size, k, cfg.k1, cfg.b, avgdl,
-        n_filter_groups=1,
+    rseg = pack_admission_rows(adm, EngineConfig(**_WAND_CFG).slab_size, 0)
+    seg = _wand_plan_segments(spark, sf_dir, plan).unionByName(
+        rseg, allowMissingColumns=True
     )
-    per = seg.groupBy("slab").applyInPandas(scorer, schema=TOPK_SCHEMA)
-    return (
-        per.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", F.round("score", 4).alias("score"))
-    )
+    return _rounded(_wand_topk(seg, plan, k, n_filter_groups=1))
 
 
 def q_search_response(

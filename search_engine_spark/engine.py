@@ -6,6 +6,15 @@ segment scan pruned to query terms (partition/file pruning on the
 term-bucketed, slab-partitioned segments table) -> per-slab block-max
 WAND inside applyInPandas -> global TakeOrdered merge -> docmap join
 for metadata/snippets.
+
+Every BM25 top-k method is one plan per query family and one of two
+executors.  A plan builder (query/plan.py: plain, fields, composed)
+turns the query into clause rows (term, w, avgdl, bscale, clause,
+fld, req) plus n_required.  ``_spark_topk`` runs plans on Spark, one
+query or a batch of them (rows carrying a qid), with admission rows
+and the tombstone over-fetch; ``_local_topk`` runs one plan with no
+Spark job, admission in ``_local_admission``.  The public ``search*``,
+``search_batch*`` and ``search_local*`` methods only build plans.
 """
 
 from __future__ import annotations
@@ -17,8 +26,19 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.indexer.build import build_index
+from search_engine_spark.query.plan import (
+    ClausePlan,
+    composed_plan,
+    field_stats,
+    fields_plan,
+    plain_plan,
+    query_weights,
+)
 from search_engine_spark.query.wand import TOPK_SCHEMA, make_slab_scorer
 from search_engine_spark.tokenizer import tokenize_query
+
+# segment columns every executor reads
+SEG_COLS = ("slab", "term", "postings", "skips", "block_max")
 
 
 def pack_admission_rows(adm: DataFrame, slab_size: int, gi: int) -> DataFrame:
@@ -560,132 +580,166 @@ class SearchEngine:
         the kernels' distinct-chunk counting (the bool.must machinery
         with a lower threshold), so WAND pruning stays exact.
         """
-        if expand:
-            from search_engine_spark.query.expansion import expand_query
-
-            weights = expand_query(query)
-        else:
-            weights = {t: 1.0 for t in tokenize_query(query)}
-        if intent:
-            from search_engine_spark.query.intent import intent_extra_weights
-
-            for t, w in intent_extra_weights(query).items():
-                weights.setdefault(t, w)
-        exclude_terms = tokenize_query(exclude) if exclude else None
-        return self._search_weights(
-            weights, k, mode=mode, exclude_terms=exclude_terms,
+        return self._spark_topk(
+            {None: self._plain(
+                query_weights(query, expand, intent), mode, min_should_match
+            )},
+            k,
+            exclude_terms=tokenize_query(exclude) if exclude else None,
             after=after, filters=filter,
             ranges=_dto_ranges(date_from, date_to, min_quality),
-            min_should_match=min_should_match,
         )
 
-    def _search_weights(
+    def _plain(
         self,
         weights: dict[str, float],
-        k: int = 10,
         mode: str = "or",
+        min_should_match: "int | str | None" = None,
+    ) -> ClausePlan:
+        """The plain family's plan (search, fuzzy, prefix, batch and
+        their serving twins): ``mode="and"`` requires every term,
+        else ``min_should_match`` of them."""
+        n = len(weights)
+        return plain_plan(
+            weights, field_stats(self.meta),
+            n if mode == "and" else _msm_count(min_should_match, n),
+        )
+
+    def _stats_with_title(self, what: str):
+        """Field statistics of an index built with titles, for the
+        field-weighted and composed families."""
+        if not self.meta.get("index_title"):
+            raise ValueError(
+                "index was built with index_title=False; rebuild to use "
+                + what
+            )
+        return field_stats(self.meta)
+
+    def _spark_topk(
+        self,
+        plans: dict,
+        k: int,
         exclude_terms: list[str] | None = None,
         after: tuple[float, int] | None = None,
         filters: "dict | None" = None,
         ranges: "list[tuple[str, float | None, float | None]] | None" = None,
-        min_should_match: "int | str | None" = None,
+        pagerank: DataFrame | None = None,
+        missing: float = 0.0,
     ) -> DataFrame:
-        """Weighted-clause WAND core shared by search / search_fuzzy /
-        search_prefix: per-term contribution = w_t * idf_t * tfn (the
-        weight folds into idf, so pruning bounds remain exact).
-        ``exclude_terms`` (bool.must_not) join as NULL-idf rows the
-        scorer decodes into per-slab exclusion sets.  ``ranges``
-        [(field, lo, hi)] are numeric doc-values filters (see
-        search()); each becomes one more admission group of raw-int64
-        rows packed from the docmap."""
-        terms = list(weights)
-        if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+        """The Spark executor of every clause plan (query/plan.py).
+
+        ``plans`` is {None: plan} for one query, answered as its
+        (docid, score) top-k, or {qid: plan} for a batch, answered as
+        (qid, docid, score, rank) through a per-qid ranking window.
+        The plans' idf table (w * idf per plan row) joins the pruned
+        segment scan as a broadcast; one applyInPandas scorer
+        (query/wand.make_slab_scorer) runs per (qid, slab) group, or
+        per slab cogrouped with the (docid, pr) rows when
+        ``pagerank`` is given, so every query of a batch shares one
+        boost vector.  Each group over-fetches k + |tombstones| and
+        the tombstone anti-join then drops pending deletes
+        (_drop_tombstones).
+
+        Single queries also take admission rows in the same per-slab
+        groups: ``exclude_terms`` (bool.must_not) as NULL-idf rows,
+        ``filters`` (bool.filter) as one ``inc`` group per field,
+        ``ranges`` [(field, lo, hi)] as one doc-values admission group
+        each, and the ``after`` cursor inside the kernels.
+        """
+        from pyspark.sql import Window
+
+        from search_engine_spark.query.advanced import PAGERANK_FACTOR
+        from search_engine_spark.query.plan import plan_idf_table
+        from search_engine_spark.query.wand import BATCH_TOPK_SCHEMA
+
+        batch = None not in plans
+        schema = BATCH_TOPK_SCHEMA if batch else TOPK_SCHEMA
+
+        def empty() -> DataFrame:
+            return self.spark.createDataFrame(
+                [], schema + (", rank int" if batch else "")
+            )
+
+        plans = {q: p for q, p in plans.items() if p.rows}
+        if not plans:
+            return empty()
         m = self.meta
-        seg = self._pruned_segments(terms).select(
-            "slab", "term", "postings", "skips", "block_max"
+        terms = sorted({r[0] for p in plans.values() for r in p.rows})
+        idfs = plan_idf_table(
+            self.spark, self.df_table, plans, float(m["n_docs"])
         )
-        idfs = self._idf_rows(terms)
-        if any(w != 1.0 for w in weights.values()):
-            wmap = F.create_map(
-                *[F.lit(x) for t, w in weights.items() for x in (t, float(w))]
-            )
-            idfs = idfs.withColumn("idf", F.col("idf") * wmap[F.col("term")])
-        seg = seg.join(F.broadcast(idfs), "term")
+        seg = self._pruned_segments(terms).select(*SEG_COLS).join(
+            F.broadcast(idfs), "term"
+        )
         if exclude_terms:
-            neg = (
-                self._pruned_segments(exclude_terms)
-                .select("slab", "term", "postings", "skips", "block_max")
-                .withColumn("idf", F.lit(None).cast("double"))
-                .select(*seg.columns)
+            seg = seg.unionByName(
+                self._pruned_segments(exclude_terms).select(*SEG_COLS),
+                allowMissingColumns=True,
             )
-            seg = seg.unionByName(neg)
         groups = self._filter_groups(filters)
         rngs = [r for r in (ranges or []) if r[1] is not None or r[2] is not None]
-        if groups or rngs:
-            seg = seg.withColumn("inc", F.lit(None).cast("int"))
-        if groups:
-            for gi, gterms in enumerate(groups):
-                fseg = (
-                    self._pruned_segments(gterms)
-                    .select("slab", "term", "postings", "skips", "block_max")
-                    .withColumn("idf", F.lit(None).cast("double"))
-                    .withColumn("inc", F.lit(gi).cast("int"))
-                    .select(*seg.columns)
-                )
-                seg = seg.unionByName(fseg)
+        for gi, gterms in enumerate(groups):
+            seg = seg.unionByName(
+                self._pruned_segments(gterms)
+                .select(*SEG_COLS)
+                .withColumn("inc", F.lit(gi).cast("int")),
+                allowMissingColumns=True,
+            )
+        if groups and self._term_slab_cache is not None:
             # slab intersection: a phrase-style AND across groups — a
             # slab where some field value never occurs cannot produce
             # an admissible doc, so skip it before any scan
-            if self._term_slab_cache is not None:
-                allowed = self._slabs_for(terms)
-                for gterms in groups:
-                    gs = self._slabs_for(gterms)
-                    allowed = (
-                        gs if allowed is None
-                        else (allowed & gs if gs is not None else allowed)
-                    )
-                if allowed is not None:
-                    if not allowed:
-                        return self.spark.createDataFrame([], TOPK_SCHEMA)
-                    seg = seg.filter(F.col("slab").isin(sorted(allowed)))
+            allowed = self._slabs_for(terms)
+            for gterms in groups:
+                allowed = allowed & self._slabs_for(gterms)
+            if not allowed:
+                return empty()
+            seg = seg.filter(F.col("slab").isin(sorted(allowed)))
         if rngs:
             # doc-values admission rows: one group per range, packed
             # from a column-pruned docmap scan; pruned to the slabs the
             # scored terms occur in (a range row for a slab with no
             # scored chunks could never contribute)
-            adm_slabs = (
-                self._slabs_for(terms)
-                if self._term_slab_cache is not None else None
-            )
+            adm_slabs = self._slabs_for(terms)
             for i, rng in enumerate(rngs):
                 rseg = self._range_admission_rows(rng, len(groups) + i)
                 if adm_slabs is not None:
                     rseg = rseg.filter(
                         F.col("slab").isin(sorted(adm_slabs))
                     )
-                seg = seg.unionByName(rseg.select(*seg.columns))
-        bound_scale = max(1.0, float(m["avgdl"]) / float(m["norm_avgdl"]))
+                seg = seg.unionByName(rseg, allowMissingColumns=True)
         scorer = make_slab_scorer(
             int(m["slab_size"]),
             int(m["block_size"]),
             k + self._n_tomb(),  # over-fetch covers pending deletes
             float(m["k1"]),
             float(m["b"]),
-            float(m["avgdl"]),
-            bound_scale,
-            n_required=(
-                len(terms) if mode == "and"
-                else _msm_count(min_should_match, len(terms))
-            ),
+            {q: (p.n_required, p.dis_max) for q, p in plans.items()},
             after=after,
             n_filter_groups=len(groups) + len(rngs),
+            pagerank=None if pagerank is None else (PAGERANK_FACTOR, missing),
         )
-        per_slab = seg.groupBy("slab").applyInPandas(scorer, schema=TOPK_SCHEMA)
-        return (
-            self._drop_tombstones(per_slab)
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(k)
+        if pagerank is None:
+            per = seg.groupBy(*(["qid"] if batch else []), "slab")
+            per = per.applyInPandas(scorer, schema=schema)
+        else:
+            pr = pagerank.select(
+                F.col(pagerank.columns[0]).cast("long").alias("docid"),
+                F.col(pagerank.columns[1]).cast("double").alias("pr"),
+            ).withColumn(
+                "slab", (F.col("docid") / int(m["slab_size"])).cast("int")
+            )
+            per = (
+                seg.groupBy("slab")
+                .cogroup(pr.groupBy("slab"))
+                .applyInPandas(scorer, schema=schema)
+            )
+        per = self._drop_tombstones(per)
+        if not batch:
+            return per.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
+        return per.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= k
         )
 
     def _range_admission_rows(self, rng, gi: int) -> DataFrame:
@@ -803,8 +857,11 @@ class SearchEngine:
         max_expansions: int = 50,
     ) -> DataFrame:
         """ES `match` with fuzziness through the real index path."""
-        return self._search_weights(
-            self.fuzzy_weights(query, max_edits, max_expansions), k
+        return self._spark_topk(
+            {None: self._plain(
+                self.fuzzy_weights(query, max_edits, max_expansions)
+            )},
+            k,
         )
 
     def search_prefix(
@@ -812,8 +869,9 @@ class SearchEngine:
     ) -> DataFrame:
         """ES `prefix` query (scoring_boolean rewrite) through the
         real index path."""
-        return self._search_weights(
-            self.prefix_weights(prefix, max_expansions), k
+        return self._spark_topk(
+            {None: self._plain(self.prefix_weights(prefix, max_expansions))},
+            k,
         )
 
     def search_fields(
@@ -835,68 +893,9 @@ class SearchEngine:
         field's avgdl at build time), so WAND pruning stays exact:
         UB(block) = sum over (term, field) of boost * idf * block_max.
         """
-        from search_engine_spark.config import TITLE_PREFIX
-        from search_engine_spark.query.expansion import field_weights
-
-        m = self.meta
-        if not m.get("index_title"):
-            raise ValueError(
-                "index was built with index_title=False; rebuild to use "
-                "field-weighted search"
-            )
-        fw = field_weights(query, expand=expand)
-        if not fw:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        av_c, av_t = float(m["avgdl"]), float(m["avgdl_title"])
-        bs_c = max(1.0, av_c / float(m["norm_avgdl"]))
-        bs_t = max(1.0, av_t / float(m["norm_avgdl_title"]))
-        rows = []
-        for t, w_c, w_t in fw:
-            rows.append((t, float(w_c), av_c, bs_c))
-            rows.append((TITLE_PREFIX + t, float(w_t), av_t, bs_t))
-        if intent:
-            # TUTORIAL should-terms as content-only clauses (weight
-            # 1.0), matching search(intent=True)'s semantics per field
-            from search_engine_spark.query.intent import (
-                intent_extra_weights,
-            )
-
-            have = {t for t, _wc, _wt in fw}
-            for t, w in intent_extra_weights(query).items():
-                if t not in have:
-                    rows.append((t, float(w), av_c, bs_c))
-        terms = [r[0] for r in rows]
-        wdf = self.spark.createDataFrame(
-            rows, "term string, w double, avgdl double, bscale double"
-        )
-        n = float(m["n_docs"])
-        idfs = (
-            self.df_table.filter(F.col("term").isin(terms))
-            .join(F.broadcast(wdf), "term")
-            .withColumn(
-                "idf",
-                F.col("w")
-                * F.log1p((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            )
-            .select("term", "idf", "avgdl", "bscale")
-        )
-        seg = self._pruned_segments(terms).select(
-            "slab", "term", "postings", "skips", "block_max"
-        )
-        joined = seg.join(F.broadcast(idfs), "term")
-        scorer = make_slab_scorer(
-            int(m["slab_size"]),
-            int(m["block_size"]),
-            k + self._n_tomb(),
-            float(m["k1"]),
-            float(m["b"]),
-            av_c,
-        )
-        per = joined.groupBy("slab").applyInPandas(scorer, schema=TOPK_SCHEMA)
-        return (
-            self._drop_tombstones(per)
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(k)
+        stats = self._stats_with_title("field-weighted search")
+        return self._spark_topk(
+            {None: fields_plan(query, stats, expand, intent)}, k
         )
 
     def search_advanced(
@@ -926,92 +925,10 @@ class SearchEngine:
         unlike ``search(mode="and", expand=True)``, expansion terms
         are never required here.
         """
-        from search_engine_spark.config import TITLE_PREFIX
-        from search_engine_spark.query.advanced import (
-            FLD_CONTENT,
-            PAGERANK_FACTOR,
-            advanced_plan,
-            plan_orig_terms,
-        )
-        from search_engine_spark.query.wand import (
-            make_adv_slab_scorer,
-            make_adv_slab_scorer_plain,
-        )
-
-        m = self.meta
-        if not m.get("index_title"):
-            raise ValueError(
-                "index was built with index_title=False; rebuild to use "
-                "the composed query"
-            )
-        plan = advanced_plan(query)
-        if not plan:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        av_c, av_t = float(m["avgdl"]), float(m["avgdl_title"])
-        bs_c = max(1.0, av_c / float(m["norm_avgdl"])) if av_c else 1.0
-        bs_t = max(1.0, av_t / float(m["norm_avgdl_title"])) if av_t else 1.0
-        orig = plan_orig_terms(query)
-        req_of = {t: i for i, t in enumerate(orig)}
-        rows = []
-        for clause, fld, t, w in plan:
-            req = req_of.get(t, -1) if clause == 0 else -1
-            if fld == FLD_CONTENT:
-                rows.append((t, float(w), av_c, bs_c, clause, 0, req))
-            else:
-                rows.append(
-                    (TITLE_PREFIX + t, float(w), av_t, bs_t, clause, 1, req)
-                )
-        terms = list({r[0] for r in rows})
-        wdf = self.spark.createDataFrame(
-            rows,
-            "term string, w double, avgdl double, bscale double, "
-            "clause int, fld int, req int",
-        )
-        n = float(m["n_docs"])
-        idfs = (
-            self.df_table.filter(F.col("term").isin(terms))
-            .join(F.broadcast(wdf), "term")
-            .withColumn(
-                "idf",
-                F.col("w")
-                * F.log1p((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            )
-            .select("term", "idf", "avgdl", "bscale", "clause", "fld", "req")
-        )
-        seg = self._pruned_segments(terms).select(
-            "slab", "term", "postings", "skips", "block_max"
-        )
-        joined = seg.join(F.broadcast(idfs), "term")
-        n_required = len(orig) if mode == "and" else 0
-        kk = k + self._n_tomb()  # over-fetch covers pending deletes
-        if pagerank is None:
-            scorer = make_adv_slab_scorer_plain(
-                int(m["slab_size"]), int(m["block_size"]), kk,
-                float(m["k1"]), float(m["b"]), n_required=n_required,
-            )
-            per = joined.groupBy("slab").applyInPandas(
-                scorer, schema=TOPK_SCHEMA
-            )
-        else:
-            slab_size = int(m["slab_size"])
-            pr = pagerank.select(
-                F.col(pagerank.columns[0]).cast("long").alias("docid"),
-                F.col(pagerank.columns[1]).cast("double").alias("pr"),
-            ).withColumn("slab", (F.col("docid") / slab_size).cast("int"))
-            scorer = make_adv_slab_scorer(
-                slab_size, int(m["block_size"]), kk,
-                float(m["k1"]), float(m["b"]), PAGERANK_FACTOR,
-                missing=missing, n_required=n_required,
-            )
-            per = (
-                joined.groupBy("slab")
-                .cogroup(pr.groupBy("slab"))
-                .applyInPandas(scorer, schema=TOPK_SCHEMA)
-            )
-        return (
-            self._drop_tombstones(per)
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(k)
+        stats = self._stats_with_title("the composed query")
+        return self._spark_topk(
+            {None: composed_plan(query, stats, mode)}, k,
+            pagerank=pagerank, missing=missing,
         )
 
     def search_advanced_with_meta(
@@ -1078,70 +995,12 @@ class SearchEngine:
         same sharp edge as ``search``), TUTORIAL-intent queries gain
         the extra should-terms.
         """
-        from search_engine_spark.query.wand import (
-            BATCH_TOPK_SCHEMA,
-            make_batch_slab_scorer,
-        )
-        from pyspark.sql import Window
-
-        m = self.meta
-        n = float(m["n_docs"])
-        rows = []
-        for qid, q in queries.items():
-            if expand:
-                from search_engine_spark.query.expansion import expand_query
-
-                weights = expand_query(q)
-            else:
-                weights = {t: 1.0 for t in tokenize_query(q)}
-            if intent:
-                from search_engine_spark.query.intent import (
-                    intent_extra_weights,
-                )
-
-                for t, w in intent_extra_weights(q).items():
-                    weights.setdefault(t, w)
-            nreq = len(weights) if mode == "and" else 0
-            for i, (t, w) in enumerate(weights.items()):
-                rows.append((qid, t, float(w), nreq, i))
-        if not rows:
-            return self.spark.createDataFrame(
-                [], BATCH_TOPK_SCHEMA + ", rank int"
-            )
-        uniq_terms = list({r[1] for r in rows})
-        qt = self.spark.createDataFrame(
-            rows, "qid string, term string, w double, nreq int, req int"
-        )
-        qt = qt.join(
-            self.df_table.filter(F.col("term").isin(uniq_terms)),
-            "term",
-        ).withColumn(
-            "idf",
-            F.col("w")
-            * F.log1p((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        ).select("qid", "term", "idf", "nreq", "req")
-        seg = self._pruned_segments(uniq_terms).select(
-            "slab", "term", "postings", "skips", "block_max"
-        )
-        joined = seg.join(F.broadcast(qt), "term")
-        bound_scale = max(1.0, float(m["avgdl"]) / float(m["norm_avgdl"]))
-        scorer = make_batch_slab_scorer(
-            int(m["slab_size"]),
-            int(m["block_size"]),
-            k + self._n_tomb(),  # over-fetch covers pending deletes
-            float(m["k1"]),
-            float(m["b"]),
-            float(m["avgdl"]),
-            bound_scale,
-        )
-        per = joined.groupBy("qid", "slab").applyInPandas(
-            scorer, schema=BATCH_TOPK_SCHEMA
-        )
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        return (
-            self._drop_tombstones(per)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+        return self._spark_topk(
+            {
+                qid: self._plain(query_weights(q, expand, intent), mode)
+                for qid, q in queries.items()
+            },
+            k,
         )
 
     def search_batch_fields(
@@ -1156,79 +1015,13 @@ class SearchEngine:
         weights/statistics, (qid, slab) WAND groups, per-qid top-k;
         ``intent`` adds the TUTORIAL content-only should-terms per
         qid, rank-identical to the single-query path)."""
-        from pyspark.sql import Window
-
-        from search_engine_spark.config import TITLE_PREFIX
-        from search_engine_spark.query.expansion import field_weights
-        from search_engine_spark.query.wand import (
-            BATCH_TOPK_SCHEMA,
-            make_batch_slab_scorer,
-        )
-
-        m = self.meta
-        if not m.get("index_title"):
-            raise ValueError(
-                "index was built with index_title=False; rebuild to use "
-                "field-weighted search"
-            )
-        av_c, av_t = float(m["avgdl"]), float(m["avgdl_title"])
-        bs_c = max(1.0, av_c / float(m["norm_avgdl"])) if av_c else 1.0
-        bs_t = max(1.0, av_t / float(m["norm_avgdl_title"])) if av_t else 1.0
-        rows = []
-        for qid, q in queries.items():
-            fw = field_weights(q, expand=expand)
-            for t, w_c, w_t in fw:
-                rows.append((qid, t, float(w_c), av_c, bs_c))
-                rows.append((qid, TITLE_PREFIX + t, float(w_t), av_t, bs_t))
-            if intent:
-                from search_engine_spark.query.intent import (
-                    intent_extra_weights,
-                )
-
-                have = {t for t, _wc, _wt in fw}
-                for t, w in intent_extra_weights(q).items():
-                    if t not in have:
-                        rows.append((qid, t, float(w), av_c, bs_c))
-        if not rows:
-            return self.spark.createDataFrame(
-                [], BATCH_TOPK_SCHEMA + ", rank int"
-            )
-        uniq_terms = list({r[1] for r in rows})
-        qt = self.spark.createDataFrame(
-            rows, "qid string, term string, w double, avgdl double, bscale double"
-        )
-        n = float(m["n_docs"])
-        qt = (
-            qt.join(
-                self.df_table.filter(F.col("term").isin(uniq_terms)), "term"
-            )
-            .withColumn(
-                "idf",
-                F.col("w")
-                * F.log1p((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            )
-            .select("qid", "term", "idf", "avgdl", "bscale")
-        )
-        seg = self._pruned_segments(uniq_terms).select(
-            "slab", "term", "postings", "skips", "block_max"
-        )
-        joined = seg.join(F.broadcast(qt), "term")
-        scorer = make_batch_slab_scorer(
-            int(m["slab_size"]),
-            int(m["block_size"]),
-            k + self._n_tomb(),
-            float(m["k1"]),
-            float(m["b"]),
-            av_c,
-        )
-        per = joined.groupBy("qid", "slab").applyInPandas(
-            scorer, schema=BATCH_TOPK_SCHEMA
-        )
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        return (
-            self._drop_tombstones(per)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+        stats = self._stats_with_title("field-weighted search")
+        return self._spark_topk(
+            {
+                qid: fields_plan(q, stats, expand, intent)
+                for qid, q in queries.items()
+            },
+            k,
         )
 
     def search_batch_advanced(
@@ -1258,107 +1051,10 @@ class SearchEngine:
         plan is empty (all terms tokenized away) yield no rows, as in
         ``search_batch``.
         """
-        from pyspark.sql import Window
-
-        from search_engine_spark.config import TITLE_PREFIX
-        from search_engine_spark.query.advanced import (
-            FLD_CONTENT,
-            PAGERANK_FACTOR,
-            advanced_plan,
-            plan_orig_terms,
-        )
-        from search_engine_spark.query.wand import (
-            BATCH_TOPK_SCHEMA,
-            make_batch_adv_cogroup_scorer,
-            make_batch_adv_slab_scorer,
-        )
-
-        m = self.meta
-        if not m.get("index_title"):
-            raise ValueError(
-                "index was built with index_title=False; rebuild to use "
-                "the composed query"
-            )
-        av_c, av_t = float(m["avgdl"]), float(m["avgdl_title"])
-        bs_c = max(1.0, av_c / float(m["norm_avgdl"])) if av_c else 1.0
-        bs_t = max(1.0, av_t / float(m["norm_avgdl_title"])) if av_t else 1.0
-        rows = []
-        for qid, q in queries.items():
-            plan = advanced_plan(q)
-            if not plan:
-                continue
-            orig = plan_orig_terms(q)
-            req_of = {t: i for i, t in enumerate(orig)}
-            nreq = len(orig) if mode == "and" else 0
-            for clause, fld, t, w in plan:
-                req = req_of.get(t, -1) if clause == 0 else -1
-                if fld == FLD_CONTENT:
-                    rows.append(
-                        (qid, t, float(w), av_c, bs_c, clause, 0, req, nreq)
-                    )
-                else:
-                    rows.append(
-                        (qid, TITLE_PREFIX + t, float(w), av_t, bs_t,
-                         clause, 1, req, nreq)
-                    )
-        if not rows:
-            return self.spark.createDataFrame(
-                [], BATCH_TOPK_SCHEMA + ", rank int"
-            )
-        uniq_terms = list({r[1] for r in rows})
-        qt = self.spark.createDataFrame(
-            rows,
-            "qid string, term string, w double, avgdl double, "
-            "bscale double, clause int, fld int, req int, nreq int",
-        )
-        n = float(m["n_docs"])
-        qt = (
-            qt.join(
-                self.df_table.filter(F.col("term").isin(uniq_terms)), "term"
-            )
-            .withColumn(
-                "idf",
-                F.col("w")
-                * F.log1p((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            )
-            .select(
-                "qid", "term", "idf", "avgdl", "bscale",
-                "clause", "fld", "req", "nreq",
-            )
-        )
-        seg = self._pruned_segments(uniq_terms).select(
-            "slab", "term", "postings", "skips", "block_max"
-        )
-        joined = seg.join(F.broadcast(qt), "term")
-        slab_size = int(m["slab_size"])
-        if pagerank is None:
-            scorer = make_batch_adv_slab_scorer(
-                slab_size, int(m["block_size"]), k + self._n_tomb(),
-                float(m["k1"]), float(m["b"]),
-            )
-            per = joined.groupBy("qid", "slab").applyInPandas(
-                scorer, schema=BATCH_TOPK_SCHEMA
-            )
-        else:
-            pr = pagerank.select(
-                F.col(pagerank.columns[0]).cast("long").alias("docid"),
-                F.col(pagerank.columns[1]).cast("double").alias("pr"),
-            ).withColumn("slab", (F.col("docid") / slab_size).cast("int"))
-            scorer = make_batch_adv_cogroup_scorer(
-                slab_size, int(m["block_size"]), k + self._n_tomb(),
-                float(m["k1"]), float(m["b"]), PAGERANK_FACTOR,
-                missing=missing,
-            )
-            per = (
-                joined.groupBy("slab")
-                .cogroup(pr.groupBy("slab"))
-                .applyInPandas(scorer, schema=BATCH_TOPK_SCHEMA)
-            )
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        return (
-            self._drop_tombstones(per)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+        stats = self._stats_with_title("the composed query")
+        return self._spark_topk(
+            {qid: composed_plan(q, stats, mode) for qid, q in queries.items()},
+            k, pagerank=pagerank, missing=missing,
         )
 
     def _local_term_rows(self, terms: list[str]) -> dict[str, list]:
@@ -1605,204 +1301,128 @@ class SearchEngine:
         round-trips.  At 100 TB a serving tier would run many of
         these heads against the same segment store.
         """
-        terms = tokenize_query(query)
-        if not terms:
-            return []
-        exclude_terms = tokenize_query(exclude) if exclude else None
-        return self._search_local_weights(
-            {t: 1.0 for t in terms}, k,
-            exclude_terms=exclude_terms, after=after, filters=filter,
+        return self._local_topk(
+            self._plain(
+                query_weights(query), min_should_match=min_should_match
+            ),
+            k,
+            exclude_terms=tokenize_query(exclude) if exclude else None,
+            after=after, filters=filter,
             ranges=_dto_ranges(date_from, date_to, min_quality),
-            min_should_match=min_should_match,
         )
 
-    def _search_local_weights(
+    def _local_topk(
         self,
-        weights: dict[str, float],
-        k: int = 10,
+        plan: ClausePlan,
+        k: int,
         exclude_terms: list[str] | None = None,
         after: tuple[float, int] | None = None,
         filters: "dict | None" = None,
         ranges: "list[tuple[str, float | None, float | None]] | None" = None,
-        min_should_match: "int | str | None" = None,
+        pagerank: dict[int, float] | None = None,
+        missing: float = 0.0,
     ) -> list[tuple[int, float]]:
-        """Weighted-clause serving core (no Spark job): per-term
-        contribution = w_t * idf_t * tfn.  ``search_local`` is the
-        all-weights-1.0 case; search_local_fuzzy / search_local_prefix
-        feed expansion weights.  ``exclude_terms`` (bool.must_not)
-        reads the excluded terms' chunks through the same pruned
-        pyarrow path and drops their docids per slab before the top-k
-        (the fused dense path is bypassed — exclusion queries take the
-        per-slab kernels, which accept an exclusion set)."""
-        import math as _math
+        """The no-Spark executor of every clause plan (query/plan.py):
+        the plan's terms come from the serving caches (or a pruned
+        pyarrow read), each plan row's contribution is w * idf * tfn
+        with its field's statistics, and one kernel call per candidate
+        slab (query/wand.plan_topk) feeds a driver-side merge.
+        Admission — ``exclude_terms`` (bool.must_not), pending
+        deletes, ``filters`` and ``ranges`` — is applied in one place
+        (_local_admission).  ``pagerank`` ({docid: pr}) is the
+        function_score boost of the composed query.
 
+        Plain OR plans over content terms with no admission take the
+        slab-fused dense path (_fused_dense) when every candidate slab
+        is dense; its results are bit-identical to the per-slab
+        kernels."""
         from search_engine_spark.indexer.codec import TermChunk
-        from search_engine_spark.query.wand import slab_topk
+        from search_engine_spark.query import wand
+        from search_engine_spark.query.advanced import PAGERANK_FACTOR
 
-        terms = list(weights)
-        if not terms:
+        if not plan.rows:
             return []
-        n_req = _msm_count(min_should_match, len(terms))
-        m = self.meta
         if self.store.kind != "parquet":
             raise NotImplementedError(
                 "the no-Spark serving path reads parquet segment files "
-                "directly; with a catalog store, serve via search()"
+                "directly; with a catalog store, serve via the Spark "
+                "search methods"
             )
+        m = self.meta
+        terms = list(dict.fromkeys(r[0] for r in plan.rows))
         by_term = self._local_term_rows(terms)
         if not by_term:
             return []
         n, df_map = float(m["n_docs"]), self._local_df(terms)
-        idf = {
-            t: weights[t]
-            * _math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5))
-            for t in terms
-            if t in df_map
-        }
+        dis_max = plan.dis_max
+        # per term: its plan rows as the kernels' chunk tuple after the
+        # chunk itself, (w * idf, avgdl, bscale, clause, fld, req), or
+        # just the first three for the sum kernel, so the per-slab loop
+        # builds no tuple it then cuts
+        width = 6 if dis_max or pagerank is not None else 3
+        entries: dict[str, list[tuple]] = {}
+        for t, w, av, bsc, clause, fld, req in plan.rows:
+            if t in df_map:
+                d = df_map[t]
+                entries.setdefault(t, []).append((
+                    w * math.log(1.0 + (n - d + 0.5) / (d + 0.5)),
+                    av, bsc, clause, fld, req,
+                )[:width])
         by_slab: dict[int, list] = {}
         for t, rows_t in by_term.items():
-            if t in idf:
+            if t in entries:
                 for r in rows_t:
                     by_slab.setdefault(int(r["slab"]), []).append(r)
-        excl_by_slab: dict[int, "np.ndarray"] = {}
-        if exclude_terms:
-            import numpy as np
-
-            ex_rows = self._local_term_rows(
-                [t for t in dict.fromkeys(exclude_terms)]
-            )
-            parts: dict[int, list] = {}
-            for rows_t in ex_rows.values():
-                for r in rows_t:
-                    slab = int(r["slab"])
-                    if slab not in by_slab:
-                        continue  # no scored candidates there anyway
-                    c = r.get("_chunk") or TermChunk(
-                        r["postings"], r["skips"], r["block_max"]
-                    )
-                    local, _tf, _dl = c.decode_blocks(
-                        np.arange(c.n_blocks, dtype=np.int64),
-                        int(m["block_size"]),
-                    )
-                    parts.setdefault(slab, []).append(local)
-            excl_by_slab = {
-                s: np.unique(np.concatenate(ps)) for s, ps in parts.items()
-            }
-        tomb_local = self._tomb_locals_by_slab(by_slab.keys())
-        if tomb_local:
-            import numpy as np
-
-            for s, arr in tomb_local.items():
-                cur = excl_by_slab.get(s)
-                excl_by_slab[s] = (
-                    arr if cur is None
-                    else np.unique(np.concatenate([cur, arr]))
-                )
-        groups = self._filter_groups(filters)
-        inc_by_slab = None
-        if groups:
-            import numpy as np
-
-            from search_engine_spark.indexer.codec import TermChunk as _TC
-
-            per_group: list[dict[int, list]] = []
-            for gterms in groups:
-                rows_g = self._local_term_rows(gterms)
-                gsets: dict[int, list] = {}
-                for rows_t in rows_g.values():
-                    for r in rows_t:
-                        slab = int(r["slab"])
-                        if slab not in by_slab:
-                            continue
-                        c = r.get("_chunk") or _TC(
-                            r["postings"], r["skips"], r["block_max"]
-                        )
-                        local, _tf, _dl = c.decode_all(int(m["block_size"]))
-                        gsets.setdefault(slab, []).append(local)
-                per_group.append(gsets)
-            from search_engine_spark.query.wand import _in_sorted
-
-            inc_by_slab = {}
-            for slab in list(by_slab):
-                if not all(slab in g for g in per_group):
-                    del by_slab[slab]  # some field value absent here
-                    continue
-                inc = np.unique(np.concatenate(per_group[0][slab]))
-                for g in per_group[1:]:
-                    s2 = np.unique(np.concatenate(g[slab]))
-                    inc = inc[_in_sorted(inc, s2)]
-                if len(inc) == 0:
-                    del by_slab[slab]
-                else:
-                    inc_by_slab[slab] = inc
-            if not by_slab:
-                return []
-        rngs = [
-            r for r in (ranges or [])
-            if r[1] is not None or r[2] is not None
-        ]
-        if rngs:
-            import numpy as np
-
-            from search_engine_spark.query.wand import _in_sorted
-
-            ss = int(m["slab_size"])
-            if inc_by_slab is None:
-                inc_by_slab = {}
-            for slab in list(by_slab):
-                base = slab * ss
-                mask = np.ones(ss, dtype=bool)
-                for field, lo, hi in rngs:
-                    vals = self._dv_slab_values(field, base, ss)
-                    if lo is not None:
-                        mask &= vals >= lo  # NaN (hole) fails
-                    if hi is not None:
-                        mask &= vals <= hi
-                inc = np.flatnonzero(mask).astype(np.int64)
-                prev = inc_by_slab.get(slab)
-                if prev is not None:
-                    inc = prev[_in_sorted(prev, inc)]
-                if len(inc) == 0:
-                    del by_slab[slab]
-                    inc_by_slab.pop(slab, None)
-                else:
-                    inc_by_slab[slab] = inc
-            if not by_slab:
-                return []
+        excl_by_slab, inc_by_slab = self._local_admission(
+            by_slab, exclude_terms, filters, ranges
+        )
+        if not by_slab:
+            return []
         if (
-            not exclude_terms and not tomb_local and not groups
-            and not rngs and not n_req
+            not exclude_terms and not excl_by_slab and inc_by_slab is None
+            and not plan.n_required and pagerank is None
+            and all(r[5] == 0 for r in plan.rows)
+            and all(len(e) == 1 for e in entries.values())
         ):
             # pending deletes take the per-slab kernels (which accept
             # exclusion sets); a purging compaction restores the
             # fused fast path
-            fused = self._fused_dense(by_term, by_slab, idf, k, after=after)
+            fused = self._fused_dense(
+                by_term, by_slab, {t: e[0][0] for t, e in entries.items()},
+                k, after=after,
+            )
             if fused is not None:
                 return fused
-        bound_scale = max(1.0, float(m["avgdl"]) / float(m["norm_avgdl"]))
+        ss, bs = int(m["slab_size"]), int(m["block_size"])
+        k1, b = float(m["k1"]), float(m["b"])
+        pr_by_slab: dict[int, tuple[list, list]] = {}
+        if pagerank is not None:
+            # one pass over the dict, not one per candidate slab — at
+            # 1M pagerank entries x 40 touched slabs the per-slab scan
+            # would dwarf the pruned pyarrow read this path exists for
+            for d, p in pagerank.items():
+                ids, prs = pr_by_slab.setdefault(d // ss, ([], []))
+                ids.append(d)
+                prs.append(p)
 
         def score_one(slab: int, rs: list):
-            chunks = [
-                (
-                    r.get("_chunk")
-                    or TermChunk(r["postings"], r["skips"], r["block_max"]),
-                    idf[r["term"]],
+            chunks = []
+            for r in rs:
+                c = r.get("_chunk") or TermChunk(
+                    r["postings"], r["skips"], r["block_max"]
                 )
-                for r in rs
-            ]
-            return slab_topk(
-                chunks,
-                slab * int(m["slab_size"]),
-                int(m["slab_size"]),
-                int(m["block_size"]),
-                k,
-                float(m["k1"]),
-                float(m["b"]),
-                float(m["avgdl"]),
-                bound_scale,
-                n_required=n_req,
-                exclude=excl_by_slab.get(slab),
-                after=after,
+                for e in entries[r["term"]]:
+                    chunks.append((c, *e))
+            boost = None
+            if pagerank is not None:
+                boost = wand.pagerank_boost(
+                    slab * ss, ss, *pr_by_slab.get(slab, ([], [])),
+                    PAGERANK_FACTOR, missing,
+                )
+            return wand.plan_topk(
+                chunks, slab * ss, ss, bs, k, k1, b,
+                n_required=plan.n_required, dis_max=dis_max, boost=boost,
+                exclude=excl_by_slab.get(slab), after=after,
                 include=(
                     inc_by_slab.get(slab) if inc_by_slab is not None
                     else None
@@ -1812,6 +1432,92 @@ class SearchEngine:
         results = self._run_slabs(by_slab, score_one)
         results.sort(key=lambda x: (-x[1], x[0]))
         return results[:k]
+
+    def _local_admission(
+        self,
+        by_slab: dict[int, list],
+        exclude_terms: list[str] | None,
+        filters: "dict | None",
+        ranges: "list[tuple[str, float | None, float | None]] | None",
+    ):
+        """Admission of the local executor, for every family: returns
+        ({slab: sorted slab-local docids to drop} from bool.must_not
+        and pending deletes, {slab: sorted admissible slab-local
+        docids} from bool.filter and ranges, or None without either).
+        Slabs that can admit no document are removed from
+        ``by_slab``."""
+        import numpy as np
+
+        from search_engine_spark.indexer.codec import TermChunk
+        from search_engine_spark.query.wand import _in_sorted
+
+        ss, bs = int(self.meta["slab_size"]), int(self.meta["block_size"])
+
+        def locals_by_slab(terms: list[str]) -> dict[int, list]:
+            """{candidate slab: [slab-local docids of each chunk]}."""
+            out: dict[int, list] = {}
+            for rows_t in self._local_term_rows(terms).values():
+                for r in rows_t:
+                    slab = int(r["slab"])
+                    if slab not in by_slab:
+                        continue  # no scored candidates there anyway
+                    c = r.get("_chunk") or TermChunk(
+                        r["postings"], r["skips"], r["block_max"]
+                    )
+                    out.setdefault(slab, []).append(c.decode_all(bs)[0])
+            return out
+
+        excl_by_slab: dict[int, "np.ndarray"] = {}
+        if exclude_terms:
+            excl_by_slab = {
+                s: np.unique(np.concatenate(ps))
+                for s, ps in locals_by_slab(
+                    list(dict.fromkeys(exclude_terms))
+                ).items()
+            }
+        for s, arr in self._tomb_locals_by_slab(by_slab.keys()).items():
+            cur = excl_by_slab.get(s)
+            excl_by_slab[s] = (
+                arr if cur is None else np.unique(np.concatenate([cur, arr]))
+            )
+        groups = self._filter_groups(filters)
+        rngs = [
+            r for r in (ranges or [])
+            if r[1] is not None or r[2] is not None
+        ]
+        if not groups and not rngs:
+            return excl_by_slab, None
+        per_group = [locals_by_slab(gterms) for gterms in groups]
+        inc_by_slab = {}
+        for slab in list(by_slab):
+            inc = None
+            if per_group:
+                if not all(slab in g for g in per_group):
+                    del by_slab[slab]  # some field value absent here
+                    continue
+                inc = np.unique(np.concatenate(per_group[0][slab]))
+                for g in per_group[1:]:
+                    s2 = np.unique(np.concatenate(g[slab]))
+                    inc = inc[_in_sorted(inc, s2)]
+            if rngs:
+                base = slab * ss
+                mask = np.ones(ss, dtype=bool)
+                for field, lo, hi in rngs:
+                    vals = self._dv_slab_values(field, base, ss)
+                    if lo is not None:
+                        mask &= vals >= lo  # NaN (hole) fails
+                    if hi is not None:
+                        mask &= vals <= hi
+                rng_inc = np.flatnonzero(mask).astype(np.int64)
+                inc = (
+                    rng_inc if inc is None
+                    else inc[_in_sorted(inc, rng_inc)]
+                )
+            if len(inc) == 0:
+                del by_slab[slab]
+            else:
+                inc_by_slab[slab] = inc
+        return excl_by_slab, inc_by_slab
 
     def search_local_cached(
         self, query: str, k: int = 10, ttl_sec: float | None = None
@@ -1888,7 +1594,7 @@ class SearchEngine:
         weights: dict[str, float] = {}
         for _qi, term, boost in rows:
             weights[term] = weights.get(term, 0.0) + boost
-        return self._search_local_weights(weights, k)
+        return self._local_topk(self._plain(weights), k)
 
     def search_local_prefix(
         self, prefix: str, k: int = 10, max_expansions: int = 50
@@ -1902,7 +1608,7 @@ class SearchEngine:
                 self._local_vocab_df(), prefix, max_expansions
             )
         }
-        return self._search_local_weights(weights, k)
+        return self._local_topk(self._plain(weights), k)
 
     def search_local_fields(
         self, query: str, k: int = 10, expand: bool = False
@@ -1912,78 +1618,8 @@ class SearchEngine:
         per-chunk field statistics (title chunks score with the title
         field's idf/avgdl/bounds at their boosts).  Rank-identical to
         ``search_fields`` — same kernel, same tie-break."""
-        import math as _math
-
-        import pyarrow.dataset as ds
-
-        from search_engine_spark.config import TITLE_PREFIX
-        from search_engine_spark.indexer.codec import TermChunk
-        from search_engine_spark.query.expansion import field_weights
-        from search_engine_spark.query.wand import slab_topk
-
-        m = self.meta
-        if not m.get("index_title"):
-            raise ValueError(
-                "index was built with index_title=False; rebuild to use "
-                "field-weighted search"
-            )
-        if self.store.kind != "parquet":
-            raise NotImplementedError(
-                "the no-Spark serving path reads parquet segment files "
-                "directly; with a catalog store, serve via search_fields()"
-            )
-        fw = field_weights(query, expand=expand)
-        if not fw:
-            return []
-        av_c, av_t = float(m["avgdl"]), float(m["avgdl_title"])
-        bs_c = max(1.0, av_c / float(m["norm_avgdl"])) if av_c else 1.0
-        bs_t = max(1.0, av_t / float(m["norm_avgdl_title"])) if av_t else 1.0
-        # per namespaced term: (boost, field avgdl, field bound scale)
-        info: dict[str, tuple[float, float, float]] = {}
-        for t, w_c, w_t in fw:
-            info[t] = (float(w_c), av_c, bs_c)
-            info[TITLE_PREFIX + t] = (float(w_t), av_t, bs_t)
-        terms = list(info)
-        by_term = self._local_term_rows(terms)
-        if not by_term:
-            return []
-        n, df_map = float(m["n_docs"]), self._local_df(terms)
-        widf = {
-            t: info[t][0]
-            * _math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5))
-            for t in terms
-            if t in df_map
-        }
-        by_slab: dict[int, list] = {}
-        for t, rows_t in by_term.items():
-            if t in widf:
-                for r in rows_t:
-                    by_slab.setdefault(int(r["slab"]), []).append(r)
-        def score_one(slab: int, rs: list):
-            chunks = [
-                (
-                    r.get("_chunk")
-                    or TermChunk(r["postings"], r["skips"], r["block_max"]),
-                    widf[r["term"]],
-                    info[r["term"]][1],
-                    info[r["term"]][2],
-                )
-                for r in rs
-            ]
-            return slab_topk(
-                chunks,
-                slab * int(m["slab_size"]),
-                int(m["slab_size"]),
-                int(m["block_size"]),
-                k,
-                float(m["k1"]),
-                float(m["b"]),
-                av_c,
-            )
-
-        results = self._run_slabs(by_slab, score_one)
-        results.sort(key=lambda x: (-x[1], x[0]))
-        return results[:k]
+        stats = self._stats_with_title("field-weighted search")
+        return self._local_topk(fields_plan(query, stats, expand), k)
 
     def search_local_advanced(
         self,
@@ -1997,102 +1633,10 @@ class SearchEngine:
         (clause max-combine + per-doc log1p(2*pagerank) boost from a
         driver-resident pagerank dict).  Rank-identical to
         ``search_advanced`` (pinned in pytest)."""
-        import math as _math
-
-        import numpy as _np
-        import pyarrow.dataset as ds
-
-        from search_engine_spark.config import TITLE_PREFIX
-        from search_engine_spark.indexer.codec import TermChunk
-        from search_engine_spark.query.advanced import (
-            FLD_CONTENT,
-            PAGERANK_FACTOR,
-            advanced_plan,
+        stats = self._stats_with_title("the composed query")
+        return self._local_topk(
+            composed_plan(query, stats), k, pagerank=pagerank, missing=missing
         )
-        from search_engine_spark.query.wand import slab_topk_adv
-
-        m = self.meta
-        if not m.get("index_title"):
-            raise ValueError(
-                "index was built with index_title=False; rebuild to use "
-                "the composed query"
-            )
-        if self.store.kind != "parquet":
-            raise NotImplementedError(
-                "the no-Spark serving path reads parquet segment files "
-                "directly; with a catalog store, serve via search_advanced()"
-            )
-        plan = advanced_plan(query)
-        if not plan:
-            return []
-        av_c, av_t = float(m["avgdl"]), float(m["avgdl_title"])
-        bs_c = max(1.0, av_c / float(m["norm_avgdl"])) if av_c else 1.0
-        bs_t = max(1.0, av_t / float(m["norm_avgdl_title"])) if av_t else 1.0
-        # per namespaced term: list of (w, avgdl, bscale, clause, fld)
-        info: dict[str, list[tuple]] = {}
-        for clause, fld, t, w in plan:
-            if fld == FLD_CONTENT:
-                info.setdefault(t, []).append(
-                    (float(w), av_c, bs_c, clause, 0)
-                )
-            else:
-                info.setdefault(TITLE_PREFIX + t, []).append(
-                    (float(w), av_t, bs_t, clause, 1)
-                )
-        terms = list(info)
-        by_term = self._local_term_rows(terms)
-        if not by_term:
-            return []
-        n, df_map = float(m["n_docs"]), self._local_df(terms)
-        idf = {
-            t: _math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5))
-            for t in terms
-            if t in df_map
-        }
-        by_slab: dict[int, list] = {}
-        for t, rows_t in by_term.items():
-            if t in idf:
-                for r in rows_t:
-                    by_slab.setdefault(int(r["slab"]), []).append(r)
-        slab_size = int(m["slab_size"])
-        use_boost = pagerank is not None
-        pr_by_slab: dict[int, list[tuple[int, float]]] = {}
-        if use_boost:
-            # one pass over the dict, not one per candidate slab — at
-            # 1M pagerank entries x 40 touched slabs the per-slab scan
-            # would dwarf the pruned pyarrow read this path exists for
-            for d, p in pagerank.items():
-                pr_by_slab.setdefault(d // slab_size, []).append((d, p))
-        def score_one(slab: int, rs: list):
-            chunks = []
-            for r in rs:
-                c = r.get("_chunk") or TermChunk(
-                    r["postings"], r["skips"], r["block_max"]
-                )
-                for w, avgdl_f, bsc, clause, fld in info[r["term"]]:
-                    chunks.append(
-                        (c, w * idf[r["term"]], avgdl_f, bsc, clause,
-                         fld, -1)
-                    )
-            boost = None
-            if use_boost:
-                boost = _np.full(
-                    slab_size,
-                    _math.log1p(PAGERANK_FACTOR * missing),
-                    dtype=_np.float64,
-                )
-                base = slab * slab_size
-                for d, p in pr_by_slab.get(slab, ()):
-                    boost[d - base] = _math.log1p(PAGERANK_FACTOR * p)
-            return slab_topk_adv(
-                chunks, slab * slab_size, slab_size,
-                int(m["block_size"]), k, float(m["k1"]), float(m["b"]),
-                boost=boost,
-            )
-
-        results = self._run_slabs(by_slab, score_one)
-        results.sort(key=lambda x: (-x[1], x[0]))
-        return results[:k]
 
     def _local_df(self, terms: list[str]) -> dict[str, int]:
         """Per-term global df for the serving path (cached)."""
@@ -2538,7 +2082,7 @@ class SearchEngine:
         w = self.mlt_weights(docid, max_terms)
         if not w:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        top = self._search_weights(w, k + 1)
+        top = self._spark_topk({None: self._plain(w)}, k + 1)
         return (
             top.filter(F.col("docid") != int(docid))
             .orderBy(F.desc("score"), F.asc("docid"))
@@ -2581,7 +2125,7 @@ class SearchEngine:
         w = {t: 1.0 for _, t in scored[:max_terms]}
         if not w:
             return []
-        res = self._search_local_weights(w, k + 1)
+        res = self._local_topk(self._plain(w), k + 1)
         return [(d, s) for d, s in res if d != int(docid)][:k]
 
     def explain(self, query: str, docid: int) -> DataFrame:

@@ -376,6 +376,9 @@ def slab_topk_adv(
     boost: "np.ndarray | None" = None,
     n_required: int = 0,
     batch_blocks: int = 64,
+    exclude: np.ndarray | None = None,
+    after: tuple[float, int] | None = None,
+    include: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Top-k of one slab for the COMPOSED query (query/advanced.py).
 
@@ -393,11 +396,16 @@ def slab_topk_adv(
       req id, not per chunk, so a term's title+content chunks (or
       multiple generations) count once.
 
+    ``exclude``, ``include`` and ``after`` admit documents exactly as
+    in ``slab_topk`` (must_not and pending deletes, bool.filter and
+    range admission, the search_after cursor), before the running
+    top-k.
+
     Pruning stays exact: the additive per-block bound over all chunks
     upper-bounds the sum-of-maxes (max(a,b) <= a+b for a,b >= 0), and
     multiplying by the block's boost maximum bounds the per-doc
-    multiply.  The conjunctive filter only removes docs, so the OR
-    bound remains valid.
+    multiply.  The conjunctive filter and the admission rules only
+    remove docs, so the OR bound remains valid.
     """
     n_grid = (slab_size + block_size - 1) // block_size
     gkey: dict[tuple, int] = {}
@@ -481,8 +489,17 @@ def slab_topk_adv(
             keep = counts[touched] >= n_required
             counts[touched] = 0
             touched, tot = touched[keep], tot[keep]
-            if len(touched) == 0:
-                continue
+        if exclude is not None:
+            keep = _not_in_sorted(touched, exclude)
+            touched, tot = touched[keep], tot[keep]
+        if include is not None:
+            keep = _in_sorted(touched, include)
+            touched, tot = touched[keep], tot[keep]
+        if after is not None:
+            keep = _after_mask(tot, touched + slab_base, after)
+            touched, tot = touched[keep], tot[keep]
+        if len(touched) == 0:
+            continue
         best_ids = np.concatenate([best_ids, touched])
         best_scores = np.concatenate([best_scores, tot])
         if len(best_ids) > k:
@@ -494,229 +511,63 @@ def slab_topk_adv(
     return best_ids[sel] + slab_base, best_scores[sel]
 
 
-def make_adv_slab_scorer(
+def plan_topk(
+    chunks: list[tuple],
+    slab_base: int,
     slab_size: int,
     block_size: int,
     k: int,
     k1: float,
     b: float,
+    n_required: int = 0,
+    dis_max: bool = False,
+    boost: "np.ndarray | None" = None,
+    exclude: np.ndarray | None = None,
+    after: tuple[float, int] | None = None,
+    include: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k of one slab for a clause plan (query/plan.py), the one
+    kernel dispatch of both executors.  chunks = [(TermChunk, w_idf,
+    avgdl, bscale, clause, fld, req)]; a sum plan may pass only the
+    first four fields.  A sum plan runs ``slab_topk``; a dis_max plan
+    (``ClausePlan.dis_max``) or a function_score ``boost`` runs
+    ``slab_topk_adv``."""
+    if dis_max or boost is not None:
+        return slab_topk_adv(
+            chunks, slab_base, slab_size, block_size, k, k1, b,
+            boost=boost, n_required=n_required,
+            exclude=exclude, after=after, include=include,
+        )
+    if len(chunks[0]) > 4:
+        chunks = [c[:4] for c in chunks]
+    # per-chunk avgdl and bound scale ride in the 4-tuples, so the
+    # slab-wide avgdl argument is unused
+    return slab_topk(
+        chunks, slab_base, slab_size, block_size, k, k1, b, 0.0,
+        n_required=n_required, exclude=exclude, after=after,
+        include=include,
+    )
+
+
+def pagerank_boost(
+    slab_base: int,
+    slab_size: int,
+    docids: np.ndarray,
+    pr: np.ndarray,
     factor: float,
     missing: float = 0.0,
-    n_required: int = 0,
-):
-    """Cogrouped applyInPandas scorer for the composed query.
-
-    Left group: one slab's matching segment rows with columns
-    (slab, term, postings, skips, block_max, idf, avgdl, bscale,
-    clause, fld, req) — idf already carries the clause weight.
-    Right group: that slab's (docid, pr) pagerank rows.  Per-doc boost
-    = log1p(factor * pr), docs absent from the pagerank side boost at
-    log1p(factor * missing).
-    """
-
-    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame({"docid": [], "score": []}).astype(
-                {"docid": "int64", "score": "float64"}
-            )
-        slab = int(left["slab"].iloc[0])
-        boost = np.full(
-            slab_size, np.log1p(factor * missing), dtype=np.float64
+) -> np.ndarray:
+    """function_score MULTIPLY vector of one slab: log1p(factor * pr)
+    for the given global docids, log1p(factor * missing) elsewhere."""
+    boost = np.full(slab_size, np.log1p(factor * missing), dtype=np.float64)
+    if len(docids):
+        boost[np.asarray(docids, dtype=np.int64) - slab_base] = np.log1p(
+            factor * np.asarray(pr, dtype=np.float64)
         )
-        if len(right):
-            loc = right["docid"].to_numpy(dtype=np.int64) - slab * slab_size
-            boost[loc] = np.log1p(
-                factor * right["pr"].to_numpy(dtype=np.float64)
-            )
-        chunks = _adv_chunks_from_rows(left.itertuples())
-        ids, sc = slab_topk_adv(
-            chunks, slab * slab_size, slab_size, block_size, k, k1, b,
-            boost=boost, n_required=n_required,
-        )
-        return pd.DataFrame({"docid": ids, "score": sc})
-
-    return score
-
-
-def make_adv_slab_scorer_plain(
-    slab_size: int,
-    block_size: int,
-    k: int,
-    k1: float,
-    b: float,
-    n_required: int = 0,
-):
-    """Ungrouped (no function_score) variant of the composed-query
-    scorer: same clause/field plan columns, no pagerank side."""
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        slab = int(pdf["slab"].iloc[0])
-        chunks = _adv_chunks_from_rows(pdf.itertuples())
-        ids, sc = slab_topk_adv(
-            chunks, slab * slab_size, slab_size, block_size, k, k1, b,
-            boost=None, n_required=n_required,
-        )
-        return pd.DataFrame({"docid": ids, "score": sc})
-
-    return score
+    return boost
 
 
 BATCH_TOPK_SCHEMA = "qid string, docid long, score double"
-
-
-def make_batch_slab_scorer(
-    slab_size: int,
-    block_size: int,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    bound_scale: float = 1.0,
-):
-    """applyInPandas scorer for (qid, slab) groups — multi-query batch.
-
-    One Spark job scores MANY queries: segments join the (qid, term,
-    idf) table, groups are (qid, slab).  This is how query
-    *throughput* scales on a cluster: queries fan out across slabs
-    and each other, amortizing job overhead.
-    """
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        slab = int(pdf["slab"].iloc[0])
-        qid = pdf["qid"].iloc[0]
-        per_field = "avgdl" in pdf.columns
-        nreq = int(pdf["nreq"].iloc[0]) if "nreq" in pdf.columns else 0
-        if nreq > 0:
-            # conjunctive (bool.must) per-qid: distinct-req coverage
-            # through the adv kernel (each term its own sum clause, so
-            # multi-generation chunks of one term count once)
-            chunks_adv = [
-                (
-                    TermChunk(r.postings, r.skips, r.block_max),
-                    float(r.idf),
-                    float(r.avgdl) if per_field else avgdl,
-                    float(r.bscale) if per_field else bound_scale,
-                    int(r.req),
-                    0,
-                    int(r.req),
-                )
-                for r in pdf.itertuples()
-            ]
-            ids, sc = slab_topk_adv(
-                chunks_adv, slab * slab_size, slab_size, block_size, k,
-                k1, b, boost=None, n_required=nreq,
-            )
-            return pd.DataFrame({"qid": qid, "docid": ids, "score": sc})
-        chunks = [
-            (
-                TermChunk(r.postings, r.skips, r.block_max),
-                float(r.idf),
-                float(r.avgdl) if per_field else avgdl,
-                float(r.bscale) if per_field else bound_scale,
-            )
-            for r in pdf.itertuples()
-        ]
-        ids, sc = slab_topk(
-            chunks,
-            slab * slab_size,
-            slab_size,
-            block_size,
-            k,
-            k1,
-            b,
-            avgdl,
-            bound_scale,
-        )
-        return pd.DataFrame({"qid": qid, "docid": ids, "score": sc})
-
-    return score
-
-
-def _adv_chunks_from_rows(rows) -> list[tuple]:
-    return [
-        (
-            TermChunk(r.postings, r.skips, r.block_max),
-            float(r.idf),
-            float(r.avgdl),
-            float(r.bscale),
-            int(r.clause),
-            int(r.fld),
-            int(r.req),
-        )
-        for r in rows
-    ]
-
-
-def make_batch_adv_slab_scorer(
-    slab_size: int, block_size: int, k: int, k1: float, b: float
-):
-    """applyInPandas scorer for (qid, slab) groups of the COMPOSED
-    query — the batch twin of ``make_adv_slab_scorer_plain``: each
-    group carries one query's clause-plan rows for one slab
-    (idf/avgdl/bscale/clause/fld/req per row, constant nreq per qid).
-    """
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        slab = int(pdf["slab"].iloc[0])
-        qid = pdf["qid"].iloc[0]
-        nreq = int(pdf["nreq"].iloc[0])
-        ids, sc = slab_topk_adv(
-            _adv_chunks_from_rows(pdf.itertuples()),
-            slab * slab_size, slab_size, block_size, k, k1, b,
-            boost=None, n_required=nreq,
-        )
-        return pd.DataFrame({"qid": qid, "docid": ids, "score": sc})
-
-    return score
-
-
-def make_batch_adv_cogroup_scorer(
-    slab_size: int,
-    block_size: int,
-    k: int,
-    k1: float,
-    b: float,
-    factor: float,
-    missing: float = 0.0,
-):
-    """Cogrouped scorer for the batch composed query WITH
-    function_score: groups are per SLAB (not per (qid, slab)) so the
-    per-doc boost vector — which is query-independent — is built ONCE
-    per slab from the cogrouped pagerank rows and shared by every
-    query in the batch; each qid's clause rows then run the adv kernel
-    against it.  At 100 TB this is the shape that avoids replicating
-    the pagerank table per query: the only duplicated state per
-    (slab, query) is the tiny clause plan."""
-
-    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"qid": pd.Series([], dtype="object"), "docid": [], "score": []}
-        ).astype({"docid": "int64", "score": "float64"})
-        if len(left) == 0:
-            return empty
-        slab = int(left["slab"].iloc[0])
-        boost = np.full(
-            slab_size, np.log1p(factor * missing), dtype=np.float64
-        )
-        if len(right):
-            loc = right["docid"].to_numpy(dtype=np.int64) - slab * slab_size
-            boost[loc] = np.log1p(
-                factor * right["pr"].to_numpy(dtype=np.float64)
-            )
-        frames = []
-        for qid, pdf in left.groupby("qid", sort=True):
-            nreq = int(pdf["nreq"].iloc[0])
-            ids, sc = slab_topk_adv(
-                _adv_chunks_from_rows(pdf.itertuples()),
-                slab * slab_size, slab_size, block_size, k, k1, b,
-                boost=boost, n_required=nreq,
-            )
-            frames.append(
-                pd.DataFrame({"qid": qid, "docid": ids, "score": sc})
-            )
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    return score
 
 
 def make_slab_scorer(
@@ -725,58 +576,51 @@ def make_slab_scorer(
     k: int,
     k1: float,
     b: float,
-    avgdl: float,
-    bound_scale: float = 1.0,
-    n_required: int = 0,
+    kernels: dict,
     after: tuple[float, int] | None = None,
     n_filter_groups: int = 0,
+    pagerank: "tuple[float, float] | None" = None,
 ):
-    """applyInPandas scorer: group = one slab's matching segment rows.
+    """The Spark executor's applyInPandas scorer: group = one slab's
+    matching segment rows, joined to the plan rows (query/plan.py
+    ``plan_idf_table``): (slab, term, postings, skips, block_max, idf,
+    avgdl, bscale, clause, fld, req), plus ``qid`` for a batch.
+    Output: the slab's top-k (docid, score) per query, with ``qid``
+    for a batch (BATCH_TOPK_SCHEMA, else TOPK_SCHEMA).
 
-    Input rows: (slab, term, idf, postings, skips, block_max) plus
-    optional per-row ``avgdl``/``bscale`` columns for field-weighted
-    scoring (each field's chunks carry that field's stats).
-    Output: that slab's top-k (docid, score).
+    ``kernels`` maps each qid (None for a single query) to its plan's
+    (n_required, dis_max), which picks the kernel (``plan_topk``).
 
-    Rows with a NULL ``idf`` are bool.must_not exclusion chunks: their
-    docids are decoded into a sorted exclusion set for this slab (they
-    contribute no score), and matching documents are dropped before
-    the top-k — the exclusion rides the SAME (slab) group as the
-    positive terms, so must_not adds no extra shuffle.
+    ``pagerank`` = (factor, missing) makes this a cogroup scorer
+    (left, right): the right group holds the slab's (docid, pr) rows,
+    and every query in the slab group shares one boost vector
+    (``pagerank_boost``), so a batch never replicates the pagerank
+    table per query.
 
-    Rows with a non-null ``inc`` column are bool.filter chunks
-    (`m#field=value` keyword postings): group i's docids union within
-    the group (OR of a field's values) and intersect across groups
-    (AND of fields) into the slab's admission set.  ``n_filter_groups``
-    is the GLOBAL group count — a slab missing any group has no
-    admissible documents at all (no doc there carries that field
-    value) and returns empty.  Filter chunks never score: ES filter
-    context.
+    Single queries may carry admission rows in the same group:
 
-    An ``inc`` row whose term is ``RAW_INC_TERM`` is a numeric-range
-    admission set (doc-values filters — dateFrom/dateTo/
-    minContentQuality): its postings bytes are raw sorted int64
-    slab-local docids packed by the driver plan from the docmap
-    columns, consumed exactly like a keyword filter group.
+    - a NULL ``idf`` row is a bool.must_not chunk: its docids form the
+      slab's exclusion set and it contributes no score, so must_not
+      adds no shuffle;
+    - a non-null ``inc`` row is a bool.filter chunk (`m#field=value`
+      keyword postings): group i's docids union within the group (OR
+      of a field's values) and intersect across groups (AND of
+      fields) into the slab's admission set.  ``n_filter_groups`` is
+      the GLOBAL group count: a slab missing any group has no
+      admissible document and returns empty.  An ``inc`` row whose
+      term is ``RAW_INC_TERM`` is a numeric-range admission set: its
+      postings bytes are raw sorted int64 slab-local docids packed by
+      the driver plan from the docmap columns.
     """
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+    def one(pdf: pd.DataFrame, qid, boost) -> tuple:
         slab = int(pdf["slab"].iloc[0])
-        per_field = "avgdl" in pdf.columns
         has_inc = "inc" in pdf.columns
-        empty = pd.DataFrame(
-            {"docid": np.zeros(0, np.int64),
-             "score": np.zeros(0, np.float64)}
-        )
         chunks = []
         excl_parts = []
         inc_parts: dict[int, list] = {}
         for r in pdf.itertuples():
             if has_inc and not pd.isna(r.inc):
                 if r.term == RAW_INC_TERM:
-                    # numeric-range admission row (doc-values form):
-                    # postings bytes are sorted int64 slab-local docids
-                    # packed by the driver plan, no varint framing
                     local = np.frombuffer(r.postings, dtype=np.int64)
                 else:
                     c = TermChunk(r.postings, r.skips, r.block_max)
@@ -792,18 +636,15 @@ def make_slab_scorer(
                 )
                 excl_parts.append(local)
                 continue
-            chunks.append(
-                (
-                    TermChunk(r.postings, r.skips, r.block_max),
-                    float(r.idf),
-                    float(r.avgdl) if per_field else avgdl,
-                    float(r.bscale) if per_field else bound_scale,
-                )
-            )
+            chunks.append((
+                TermChunk(r.postings, r.skips, r.block_max),
+                float(r.idf), float(r.avgdl), float(r.bscale),
+                int(r.clause), int(r.fld), int(r.req),
+            ))
         include = None
         if n_filter_groups:
             if len(inc_parts) < n_filter_groups:
-                return empty  # some field value absent from this slab
+                return None  # some field value absent from this slab
             sets = [
                 np.unique(np.concatenate(ps)) for ps in inc_parts.values()
             ]
@@ -811,27 +652,61 @@ def make_slab_scorer(
             for s2 in sets[1:]:
                 include = include[_in_sorted(include, s2)]
             if len(include) == 0:
-                return empty
+                return None
         if not chunks:
-            return empty
-        exclude = (
-            np.unique(np.concatenate(excl_parts)) if excl_parts else None
+            return None
+        n_required, dis_max = kernels[qid]
+        return plan_topk(
+            chunks, slab * slab_size, slab_size, block_size, k, k1, b,
+            n_required=n_required, dis_max=dis_max, boost=boost,
+            exclude=(
+                np.unique(np.concatenate(excl_parts)) if excl_parts
+                else None
+            ),
+            after=after, include=include,
         )
-        ids, sc = slab_topk(
-            chunks,
-            slab * slab_size,
-            slab_size,
-            block_size,
-            k,
-            k1,
-            b,
-            avgdl,
-            bound_scale,
-            n_required=n_required,
-            exclude=exclude,
-            after=after,
-            include=include,
-        )
-        return pd.DataFrame({"docid": ids, "score": sc})
 
-    return score
+    batch = None not in kernels
+
+    def run(pdf: pd.DataFrame, boost) -> pd.DataFrame:
+        groups = (
+            [] if len(pdf) == 0
+            else pdf.groupby("qid", sort=True) if batch
+            else [(None, pdf)]
+        )
+        ids_parts, sc_parts, qids = [], [], []
+        for qid, g in groups:
+            got = one(g, qid, boost)
+            if got is not None:
+                ids_parts.append(got[0])
+                sc_parts.append(got[1])
+                qids.extend([qid] * len(got[0]))
+        out = {
+            "docid": np.concatenate(ids_parts) if ids_parts
+            else np.zeros(0, np.int64),
+            "score": np.concatenate(sc_parts) if sc_parts
+            else np.zeros(0, np.float64),
+        }
+        if batch:
+            out = {"qid": pd.Series(qids, dtype="object"), **out}
+        return pd.DataFrame(out)
+
+    if pagerank is None:
+        def score(pdf: pd.DataFrame) -> pd.DataFrame:
+            return run(pdf, None)
+
+        return score
+    factor, missing = pagerank
+
+    def score_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0:
+            return run(left, None)
+        slab = int(left["slab"].iloc[0])
+        boost = pagerank_boost(
+            slab * slab_size, slab_size,
+            right["docid"].to_numpy(dtype=np.int64),
+            right["pr"].to_numpy(dtype=np.float64), factor, missing,
+        )
+        return run(left, boost)
+
+    return score_cogroup

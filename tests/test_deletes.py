@@ -4,7 +4,8 @@ liveDocs-style masking now (stats stay pre-delete), physical reclaim
 + stats refresh at merge, docids never reused.
 
 Covers: the masked-ranking invariant on every query surface (search,
-serving, fields, advanced, batch, sorted, phrase, fuzzy, search_after,
+serving, fields, advanced, their serving twins search_local_fields
+and search_local_advanced, batch, sorted, phrase, fuzzy, search_after,
 count_matches), delete-by-query, purge correctness (postings gone,
 stats/df refreshed, tombstones cleared, splice upgraded to re-encode),
 and the append-after-purge docid watermark.
@@ -78,6 +79,20 @@ def test_masked_ranking_all_surfaces(engine):
     )
     srt = engine.search_local_sorted(Q, 20, "date")
     assert not ({d for d, _, _ in srt} & set(victims))
+    # the serving twins of fields / advanced rank differently, so each
+    # loses its own top hits to a second delete
+    pre_f = engine.search_local_fields(Q, 40)
+    pre_a = engine.search_local_advanced(Q, 40)
+    more = [pre_f[0][0], pre_a[2][0]]
+    engine.delete(docids=more)
+    for got, pre_l in (
+        (engine.search_local_fields(Q, 10), pre_f),
+        (engine.search_local_advanced(Q, 10), pre_a),
+    ):
+        want_l = _masked(pre_l, more, 10)
+        assert [d for d, _ in got] == [d for d, _ in want_l]
+        for (_, a), (_, b) in zip(got, want_l):
+            assert a == pytest.approx(b, rel=1e-12)
 
 
 def test_delete_composes_with_after_and_not(engine):

@@ -94,6 +94,46 @@ def test_search_local_fields_matches_spark(engine, oracle):
     assert [d for d, _ in got] == [d for d, _ in want]
 
 
+def test_fields_on_index_with_empty_titles(spark, tmp_path):
+    """Every path basename tokenizes to nothing, so the title field's
+    avgdl (and its block-max basis) is 0: the single, batch and
+    serving field-weighted paths answer the same ranking."""
+    import pandas as pd
+
+    docs = pd.DataFrame({
+        "repo": ["r"] * 6,
+        "path": [f"d{i}/__" for i in range(6)],
+        "commit": ["c"] * 6,
+        "lang": ["go"] * 6,
+        "content": [
+            "merge buffer index", "merge merge", "buffer read",
+            "index merge buffer buffer", "nothing here", "merge",
+        ],
+    })
+    df = spark.createDataFrame(
+        docs,
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    eng = SearchEngine.build(spark, df, str(tmp_path / "empty_titles"), CFG)
+    assert float(eng.meta["avgdl_title"]) == 0.0
+    q = "merge buffer"
+    single = [
+        (r["docid"], r["score"]) for r in eng.search_fields(q, 5).collect()
+    ]
+    batch = sorted(
+        (r["rank"], r["docid"], r["score"])
+        for r in eng.search_batch_fields({"a": q}, 5).collect()
+    )
+    local = eng.search_local_fields(q, 5)
+    assert len(single) == 5  # every doc holding merge or buffer
+    assert [d for _, d, _ in batch] == [d for d, _ in single]
+    assert [d for d, _ in local] == [d for d, _ in single]
+    for (_, a), (_, _, b), (_, c) in zip(single, batch, local):
+        assert a == pytest.approx(b, rel=1e-9)
+        assert a == pytest.approx(c, rel=1e-9)
+
+
 def test_title_boost_changes_ranking(engine, oracle):
     """A term that appears in some path basenames must rank
     title-hits above content-only hits more aggressively than the
