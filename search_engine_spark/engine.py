@@ -151,6 +151,24 @@ def _dto_ranges(date_from, date_to, min_quality):
     return ranges or None
 
 
+def _join_chunks(parts: list) -> tuple:
+    """One term's per-chunk (global docids, tf-norm factors, ...)
+    tuples -> the two arrays concatenated, after sorting ``parts`` in
+    place by first docid.  Chunks (slabs, and generations within a
+    slab) cover disjoint docid ranges, so the docids come out sorted;
+    within a term no docid repeats, so no score sum depends on the
+    chunk order."""
+    import numpy as np
+
+    parts.sort(key=lambda p: p[0][:1].tolist())
+    if len(parts) == 1:
+        return parts[0][0], parts[0][1]
+    return (
+        np.concatenate([p[0] for p in parts]),
+        np.concatenate([p[1] for p in parts]),
+    )
+
+
 class _ArrowStrings:
     """A sorted Arrow string array as a read-only sequence of Python
     strings, for ``bisect``: one scalar conversion per probe."""
@@ -240,14 +258,13 @@ class SearchEngine:
         # phrase support (indexer/positions.py): lazily-read positional
         # segments, the per-generation staleness verdict, the last
         # query's persisted candidate set, and the serving path's
-        # doclen array + pyarrow dataset handle
+        # pyarrow dataset handle
         old = getattr(self, "_phrase_matches", None)
         if old is not None:
             old.unpersist()
         self._possegments = None
         self._pos_ok: bool | None = None
         self._phrase_matches: DataFrame | None = None
-        self._doclen_arr = None
         self._pos_local_ds = None
         self._term_slab_cache: dict[str, frozenset] | None = (
             {} if self.store.kind == "parquet"
@@ -265,7 +282,8 @@ class SearchEngine:
         # other generation-scoped cache.
         self._tomb: "bool | None" = False
         self._tombdf = None
-        # serving-tier docmap field arrays (facets), per generation
+        # serving-tier docmap field arrays (facets, doclen), per
+        # generation
         self._field_arrs: dict = {}
         # serving-tier page store (_page_store): (sorted docids, DTO
         # projection table), per generation
@@ -460,23 +478,6 @@ class SearchEngine:
                 [(int(d),) for d in t], "docid long"
             )
         return df.join(F.broadcast(self._tombdf), "docid", "left_anti")
-
-    def _tomb_locals_by_slab(self, slabs) -> dict:
-        """{slab: sorted slab-LOCAL deleted docids} for the serving
-        kernels' exclusion sets."""
-        import numpy as np
-
-        t = self._tombstones_arr()
-        if t is None:
-            return {}
-        ss = int(self.meta["slab_size"])
-        out = {}
-        for s in slabs:
-            lo = np.searchsorted(t, s * ss)
-            hi = np.searchsorted(t, (s + 1) * ss)
-            if hi > lo:
-                out[s] = t[lo:hi] - s * ss
-        return out
 
     @staticmethod
     def _filter_groups(filters: "dict | None") -> list[list[str]]:
@@ -1157,8 +1158,6 @@ class SearchEngine:
                 r.pop("_chunk", None)
             self._decoded_nbytes -= ent["nb"]
             del dc[term]
-        import numpy as np
-
         from search_engine_spark.indexer.codec import TermChunk, tf_norm_factor
 
         m = self.meta
@@ -1166,32 +1165,30 @@ class SearchEngine:
         ss = int(m["slab_size"])
         fkey = (float(m["k1"]), float(m["b"]), float(m["avgdl"]))
         nb = 0
-        gid_parts = []
-        fac_parts = []
-        chunks = []
+        parts = []
         for r in rows:
             c = TermChunk(r["postings"], r["skips"], r["block_max"])
             c._full = c._decode_full(bs)
             c._full_block_size = bs
             nb += sum(int(a.nbytes) for a in c._full)
             r["_chunk"] = c
-            chunks.append(c)
-            gid_parts.append(c._full[0] + int(r["slab"]) * ss)
-            fac_parts.append(tf_norm_factor(c._full[1], c._full[2], *fkey))
+            parts.append((
+                c._full[0] + int(r["slab"]) * ss,
+                tf_norm_factor(c._full[1], c._full[2], *fkey),
+                c,
+            ))
         # the term's postings as ONE global array pair, docids and
         # tf-norm factors — the slab-fused scorer (_fused_dense) runs
-        # off these with no per-chunk Python loop in the query path.
-        # Each chunk's factor memo (TermChunk.factor_all, the per-slab
-        # kernels) is a view of the same factor array, so no scoring
-        # path computes a factor after priming and a term's first
-        # query costs what its later ones do.  Title chunks score with
-        # their own avgdl and still memoize on first use.
-        gids, fac = (
-            (gid_parts[0], fac_parts[0]) if len(gid_parts) == 1
-            else (np.concatenate(gid_parts), np.concatenate(fac_parts))
-        )
+        # off these with no per-chunk Python loop in the query path,
+        # and the match-set paths (_local_matches) search the sorted
+        # docids.  Each chunk's factor memo (TermChunk.factor_all, the
+        # per-slab kernels) is a view of the same factor array, so no
+        # scoring path computes a factor after priming and a term's
+        # first query costs what its later ones do.  Title chunks
+        # score with their own avgdl and still memoize on first use.
+        gids, fac = _join_chunks(parts)
         off = 0
-        for c, f in zip(chunks, fac_parts):
+        for _g, f, c in parts:
             c._fnorm = (fkey, fac[off:off + len(f)])
             off += len(f)
         nb += int(gids.nbytes) + int(fac.nbytes)
@@ -1475,11 +1472,15 @@ class SearchEngine:
                     list(dict.fromkeys(exclude_terms))
                 ).items()
             }
-        for s, arr in self._tomb_locals_by_slab(by_slab.keys()).items():
-            cur = excl_by_slab.get(s)
-            excl_by_slab[s] = (
-                arr if cur is None else np.unique(np.concatenate([cur, arr]))
-            )
+        tomb = self._tombstones_arr()
+        for s in by_slab if tomb is not None else ():
+            lo, hi = np.searchsorted(tomb, [s * ss, (s + 1) * ss])
+            if hi > lo:
+                cur, arr = excl_by_slab.get(s), tomb[lo:hi] - s * ss
+                excl_by_slab[s] = (
+                    arr if cur is None
+                    else np.unique(np.concatenate([cur, arr]))
+                )
         groups = self._filter_groups(filters)
         rngs = [
             r for r in (ranges or [])
@@ -1518,6 +1519,59 @@ class SearchEngine:
             else:
                 inc_by_slab[slab] = inc
         return excl_by_slab, inc_by_slab
+
+    def _local_matches(
+        self,
+        terms: list[str],
+        filters: "dict | None" = None,
+        ranges: "list[tuple[str, float | None, float | None]] | None" = None,
+    ):
+        """Match set of the no-Spark paths that take no top-k (sorted,
+        count, facets): (sorted global docids of the live documents
+        matching any of ``terms`` that ``filters`` and ``ranges``
+        admit, {term: (its sorted global docids, tf-norm factors)})
+        from the decoded cache (_prime_decoded), or from factor_all
+        with it off.  Admission is _local_admission's."""
+        import numpy as np
+
+        from search_engine_spark.indexer.codec import TermChunk
+
+        m = self.meta
+        ss, bs = int(m["slab_size"]), int(m["block_size"])
+        fkey = (float(m["k1"]), float(m["b"]), float(m["avgdl"]))
+        per_term = {}
+        for t, rows_t in self._local_term_rows(terms).items():
+            ent = self._decoded_cache.get(t)
+            if ent is not None and ent["rows"] is rows_t:
+                per_term[t] = (ent["gids"], ent["fac"])
+                continue
+            parts = []
+            for r in rows_t:
+                c = r.get("_chunk") or TermChunk(
+                    r["postings"], r["skips"], r["block_max"]
+                )
+                local, fac = c.factor_all(bs, *fkey)
+                parts.append((local + int(r["slab"]) * ss, fac))
+            per_term[t] = _join_chunks(parts)
+        if not per_term:
+            return np.zeros(0, dtype=np.int64), per_term
+        # the union as a bitmap over the candidate slabs: no sort
+        n = max(int(g[-1]) for g, _ in per_term.values()) // ss + 1
+        hit = np.zeros(n * ss, dtype=bool)
+        for g, _ in per_term.values():
+            hit[g] = True
+        by_slab = dict.fromkeys(
+            np.flatnonzero(hit.reshape(n, ss).any(axis=1)).tolist()
+        )
+        excl, inc = self._local_admission(by_slab, None, filters, ranges)
+        for s, a in excl.items():
+            hit[a + s * ss] = False
+        if inc is not None:
+            adm = np.zeros_like(hit)
+            for s, a in inc.items():
+                adm[a + s * ss] = True
+            hit &= adm
+        return np.flatnonzero(hit), per_term
 
     def search_local_cached(
         self, query: str, k: int = 10, ttl_sec: float | None = None
@@ -1674,12 +1728,14 @@ class SearchEngine:
             )
         )
 
-    def _decoded_postings_df(self, terms: list[str]) -> DataFrame:
+    def _decoded_postings_df(
+        self, terms: list[str], slabs: "list[int] | None" = None
+    ) -> DataFrame:
         """(term, docid, tf) rows decoded from the pruned segment scan
         — one mapInPandas over the bucket/term/slab-pruned files,
-        global docids.  The non-scoring decode shared by sortBy
-        retrieval (and any future operator that needs the raw match
-        set rather than a top-k)."""
+        global docids; ``slabs`` narrows the scan to those slab
+        partitions.  The non-scoring decode of the survivors' scores
+        (search_sorted) and of explain."""
         import pandas as pd
 
         from search_engine_spark.indexer.codec import TermChunk
@@ -1701,25 +1757,60 @@ class SearchEngine:
                         }
                     )
 
-        seg = self._pruned_segments(terms).select(
-            "slab", "term", "postings", "skips", "block_max"
-        )
+        seg = self._pruned_segments(terms)
+        if slabs is not None:
+            seg = seg.filter(F.col("slab").isin(slabs))
+        seg = seg.select("slab", "term", "postings", "skips", "block_max")
         return seg.mapInPandas(gen, schema="term string, docid long, tf int")
 
-    def _admissible_docids(
+    def _match_docids(
         self,
+        terms: list[str],
         filters: "dict | None" = None,
         ranges: "list | None" = None,
-    ) -> "DataFrame | None":
-        """(docid) rows passing the keyword filters and doc-values
-        ranges, as plain docmap predicates — the admissibility the
-        kernel paths enforce via postings/raw-admission rows,
-        recomputed as a column-pruned docmap scan for the paths that
-        operate on candidate sets (search_sorted, the use-case
-        facade).  Returns None when nothing is constrained."""
+    ) -> DataFrame:
+        """(docid) rows of the live documents matching any of
+        ``terms`` and admitted by ``filters`` and ``ranges``: per slab
+        group of the pruned segment scan, the union of the chunks'
+        decoded docids minus pending deletes, semi-joined to the
+        documents the filters and ranges admit.  Slabs are disjoint
+        docid ranges, so the rows are distinct.  The match set of the
+        Spark paths that take no top-k (search_sorted, count_matches,
+        facet_counts)."""
+        import pandas as pd
+
+        from search_engine_spark.indexer.codec import TermChunk
+
+        block_size = int(self.meta["block_size"])
+        ss = int(self.meta["slab_size"])
+        tomb = self._tombstones_arr()
+
+        def live_docids(pdf: pd.DataFrame) -> pd.DataFrame:
+            import numpy as np
+
+            from search_engine_spark.query.wand import _not_in_sorted
+
+            ids = np.unique(np.concatenate([
+                TermChunk(r.postings, r.skips, r.block_max).decode_all(
+                    block_size
+                )[0]
+                for r in pdf.itertuples()
+            ])) + int(pdf["slab"].iloc[0]) * ss
+            if tomb is not None:
+                ids = ids[_not_in_sorted(ids, tomb)]
+            return pd.DataFrame({"docid": ids})
+
+        cand = (
+            self._pruned_segments(terms)
+            .select("slab", "postings", "skips", "block_max")
+            .groupBy("slab")
+            .applyInPandas(live_docids, schema="docid long")
+        )
         if not filters and not ranges:
-            return None
-        adm = self.docmap
+            return cand
+        # filters and ranges as plain docmap predicates: the admission
+        # the top-k kernels apply through admission rows, here one
+        # column-pruned docmap scan
         cond = F.lit(True)
         for field, value in (filters or {}).items():
             vals = value if isinstance(value, (list, tuple)) else [value]
@@ -1730,9 +1821,10 @@ class SearchEngine:
                 cond = cond & (v >= float(lo))
             if hi is not None:
                 cond = cond & (v <= float(hi))
-        return adm.filter(cond).select(
+        adm = self.docmap.filter(cond).select(
             F.col("docid").cast("long").alias("docid")
         )
+        return cand.join(adm, "docid", "left_semi")
 
     def search_sorted(
         self,
@@ -1758,12 +1850,15 @@ class SearchEngine:
         e.g. ops/graph.pagerank_converged output, missing docs at 0.0;
         with ``rank=None`` the deterministic hash rank stands in.
 
-        Plan shape (the 100 TB story): pruned segment scan -> decode
-        to (docid) -> distinct (one shuffle on docid) -> TakeOrdered k
-        by key (per-partition top-k + driver merge, no global sort) ->
-        BM25 scores computed for the k SURVIVORS ONLY (a second pruned
-        scan filtered to k docids + broadcast idf + docmap doclen for
-        k rows).  Sorting by a field never scores the full match set.
+        Plan shape (the 100 TB story): the match set (_match_docids:
+        pruned segment scan -> per-slab live docids, filters and
+        ranges applied BEFORE the top-k, so a filtered sort is the
+        sort of the filtered set) -> TakeOrdered k by key
+        (per-partition top-k + driver merge, no global sort) -> BM25
+        scores computed for the k SURVIVORS ONLY (a second scan of the
+        survivors' slabs filtered to k docids + broadcast idf + docmap
+        doclen for k rows).  Sorting by a field never scores the full
+        match set.
         """
         if sort_by in ("relevance", "score"):
             return self.search(
@@ -1781,15 +1876,9 @@ class SearchEngine:
         terms = tokenize_query(query)
         if not terms:
             return self.spark.createDataFrame([], empty)
-        dec = self._drop_tombstones(self._decoded_postings_df(terms))
-        cand = dec.select("docid").distinct()
-        adm = self._admissible_docids(
-            filter, _dto_ranges(date_from, date_to, min_quality)
+        cand = self._match_docids(
+            terms, filter, _dto_ranges(date_from, date_to, min_quality)
         )
-        if adm is not None:
-            # filters apply BEFORE the top-k by sort key (exact —
-            # a filtered sort is the sort of the filtered set)
-            cand = cand.join(adm, "docid", "left_semi")
         if sort_by == "date":
             keyed = cand.withColumn(
                 "sort_key", pub_day_col(F.col("docid")).cast("double")
@@ -1813,6 +1902,8 @@ class SearchEngine:
             "docid", "doclen"
         )
         tfd = F.col("tf").cast("double")
+        ss = int(m["slab_size"])
+        dec = self._decoded_postings_df(terms, sorted({d // ss for d in surv}))
         scores = (
             dec.filter(F.col("docid").isin(surv))
             .join(F.broadcast(self._idf_rows(terms)), "term")
@@ -1840,23 +1931,20 @@ class SearchEngine:
         matching ANY query term, counted per docmap ``field`` value,
         top ``size`` buckets by (count desc, value asc).
 
-        Plan shape: pruned segment scan -> decode docids -> distinct
-        (one shuffle) -> broadcast-side join against the docmap
-        projection of (docid, field) -> partial-aggregated count ->
-        TakeOrdered.  The aggregation never touches content — only
-        the two projected columns — so at 100 TB it is a counted
-        semi-join, not a document scan.  Tombstoned docs are excluded
+        Plan shape: the match set (_match_docids) -> join against the
+        docmap projection of (docid, field) -> partial-aggregated
+        count -> TakeOrdered.  The aggregation never touches content
+        — only the two projected columns — so at 100 TB it is a
+        counted semi-join, not a document scan.  Tombstoned docs are excluded
         (facets over deleted docs would leak them back).
         """
         terms = tokenize_query(query)
         empty = f"{field} string, cnt long"
         if not terms:
             return self.spark.createDataFrame([], empty)
-        cand = self._drop_tombstones(
-            self._decoded_postings_df(terms).select("docid").distinct()
-        )
         return (
-            cand.join(self.docmap.select("docid", field), "docid")
+            self._match_docids(terms)
+            .join(self.docmap.select("docid", field), "docid")
             .groupBy(field)
             .agg(F.count("*").cast("long").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc(field))
@@ -1866,36 +1954,16 @@ class SearchEngine:
     def facet_counts_local(
         self, query: str, field: str = "lang", size: int = 10
     ) -> list[tuple[str, int]]:
-        """Serving twin of ``facet_counts`` (no Spark job): pruned
-        pyarrow chunk read -> union of decoded docids -> gather the
-        per-generation field array -> value counts.  Identical
-        buckets/counts to the Spark path (pure integer counting)."""
+        """Serving twin of ``facet_counts`` (no Spark job): the match
+        set (_local_matches) -> gather the per-generation field array
+        -> value counts.  Identical buckets/counts to the Spark path
+        (pure integer counting)."""
         import numpy as np
 
-        from search_engine_spark.indexer.codec import TermChunk
-
         terms = list(dict.fromkeys(tokenize_query(query)))
-        if not terms:
+        ids = self._local_matches(terms)[0] if terms else []
+        if not len(ids):
             return []
-        by_term = self._local_term_rows(terms)
-        if not by_term:
-            return []
-        m = self.meta
-        ss, bs = int(m["slab_size"]), int(m["block_size"])
-        parts = []
-        for rows_t in by_term.values():
-            for r in rows_t:
-                c = r.get("_chunk") or TermChunk(
-                    r["postings"], r["skips"], r["block_max"]
-                )
-                local, _tf, _dl = c.decode_all(bs)
-                parts.append(local + int(r["slab"]) * ss)
-        ids = np.unique(np.concatenate(parts))
-        tomb = self._tombstones_arr()
-        if tomb is not None and len(ids):
-            from search_engine_spark.query.wand import _not_in_sorted
-
-            ids = ids[_not_in_sorted(ids, tomb)]
         vals = self._field_all(field)[ids]
         uniq, cnt = np.unique(vals, return_counts=True)
         order = np.lexsort((uniq, -cnt))[:size]
@@ -1912,10 +1980,9 @@ class SearchEngine:
         import numpy as np
 
         if field == "day":
-            from search_engine_spark.ops.ranking import PUBLISH_RANGE_DAYS
+            from search_engine_spark.ops.ranking import pub_day_np
 
-            g = base + np.arange(n, dtype=np.int64)
-            return ((g * 16807) % PUBLISH_RANGE_DAYS).astype(np.float64)
+            return pub_day_np(base + np.arange(n)).astype(np.float64)
         if field != "quality":
             raise ValueError(f"unknown range field {field!r}")
         arr = self._dv_arrs.get("quality")
@@ -1957,8 +2024,10 @@ class SearchEngine:
         return out
 
     def _field_all(self, field: str):
-        """Per-generation object array docid -> docmap[field] for the
-        serving tier (pyarrow read, cached per field)."""
+        """Per-generation array docid -> docmap[field] for the serving
+        tier (pyarrow read, cached per field): objects for a string
+        field (facets), the column's integers for ``doclen`` (the
+        norms table)."""
         cache = self._field_arrs
         if field not in cache:
             import numpy as np
@@ -1968,8 +2037,9 @@ class SearchEngine:
                 f"{self.index_dir}/docmap", partitioning="hive"
             ).to_table(columns=["docid", field])
             ids = tab.column("docid").to_numpy()
-            arr = np.empty(int(ids.max()) + 1, dtype=object)
-            arr[ids] = tab.column(field).to_pylist()
+            vals = tab.column(field).to_numpy()
+            arr = np.zeros(int(ids.max()) + 1, dtype=vals.dtype)
+            arr[ids] = vals
             cache[field] = arr
         return cache[field]
 
@@ -1995,7 +2065,12 @@ class SearchEngine:
             )
             keep = ("docid", "repo", "path", "commit", "lang")
             cols: dict[str, list] = {c: [] for c in (*keep, "snippet")}
-            for b in dset.to_batches(columns=[*keep, "content"]):
+            # the content scan runs on the system allocator, which
+            # hands its pages back afterwards (release_unused)
+            pool = pa.system_memory_pool()
+            for b in dset.to_batches(
+                columns=[*keep, "content"], memory_pool=pool
+            ):
                 for c in keep:
                     cols[c].append(b.column(c))
                 cols["snippet"].append(pa.array(
@@ -2011,6 +2086,7 @@ class SearchEngine:
             ids = tab.column("docid").to_numpy()
             order = np.argsort(ids, kind="stable")
             tab = tab.take(order).combine_chunks()
+            pool.release_unused()
             self._pages = (ids[order], tab)
         return self._pages
 
@@ -2152,7 +2228,7 @@ class SearchEngine:
         k1, b = float(m["k1"]), float(m["b"])
         avgdl = float(m["avgdl"])
         dec = (
-            self._decoded_postings_df_sl(terms, slab)
+            self._decoded_postings_df(terms, [slab])
             .filter(F.col("docid") == int(docid))
         )
         dl = self.docmap.filter(F.col("docid") == int(docid)).select(
@@ -2183,39 +2259,6 @@ class SearchEngine:
             .orderBy(F.desc("contribution"), F.asc("term"))
         )
 
-    def _decoded_postings_df_sl(
-        self, terms: list[str], slab: int
-    ) -> DataFrame:
-        """Single-slab variant of ``_decoded_postings_df`` — adds the
-        slab partition predicate so only that slab's files list."""
-        import pandas as pd
-
-        from search_engine_spark.indexer.codec import TermChunk
-
-        block_size = int(self.meta["block_size"])
-        ss = int(self.meta["slab_size"])
-
-        def gen(it):
-            for pdf in it:
-                for r in pdf.itertuples():
-                    local, tf, _dl = TermChunk(
-                        r.postings, r.skips, r.block_max
-                    ).decode_all(block_size)
-                    yield pd.DataFrame(
-                        {
-                            "term": r.term,
-                            "docid": local + r.slab * ss,
-                            "tf": tf.astype("int32"),
-                        }
-                    )
-
-        seg = (
-            self._pruned_segments(terms)
-            .filter(F.col("slab") == int(slab))
-            .select("slab", "term", "postings", "skips", "block_max")
-        )
-        return seg.mapInPandas(gen, schema="term string, docid long, tf int")
-
     def explain_local(
         self, query: str, docid: int
     ) -> list[tuple[str, int, int, float, float, float]]:
@@ -2235,7 +2278,7 @@ class SearchEngine:
         n = float(m["n_docs"])
         k1, b, avgdl = float(m["k1"]), float(m["b"]), float(m["avgdl"])
         df_map = self._local_df(terms)
-        dl = float(self._doclen_all()[int(docid)])
+        dl = float(self._field_all("doclen")[int(docid)])
         out = []
         for t, rows_t in by_term.items():
             if t not in df_map:
@@ -2325,221 +2368,107 @@ class SearchEngine:
             "positional_index": pos_state,
         }
 
-    def _doclen_all(self):
-        """Per-generation int32 doclen array indexed by docid — the
-        serving tier's norms table (pyarrow read, cached)."""
-        if self._doclen_arr is None:
-            import numpy as np
-            import pyarrow.dataset as ds
-
-            tab = ds.dataset(
-                f"{self.index_dir}/docmap", partitioning="hive"
-            ).to_table(columns=["docid", "doclen"])
-            ids = tab.column("docid").to_numpy()
-            arr = np.zeros(int(ids.max()) + 1, dtype=np.int32)
-            arr[ids] = tab.column("doclen").to_numpy()
-            self._doclen_arr = arr
-        return self._doclen_arr
-
     def search_local_sorted(
         self,
         query: str,
         k: int = 10,
         sort_by: str = "date",
         rank: "dict[int, float] | None" = None,
+        filter: "dict | None" = None,
+        date_from: "str | int | None" = None,
+        date_to: "str | int | None" = None,
+        min_quality: float | None = None,
     ) -> list[tuple[int, float, float]]:
-        """Serving twin of ``search_sorted`` (no Spark job): pruned
-        pyarrow chunk read -> union of decoded docids -> vectorized
-        key -> top-k by (key desc, docid asc) -> BM25 for survivors
-        from the already-decoded tfs + the doclen array.  Returns
-        [(docid, sort_key, score)]; rank-identical to the Spark path
-        (same integer keys), scores agree to float tolerance."""
-        import math as _math
-
+        """Serving twin of ``search_sorted`` (no Spark job), with the
+        same filters and ranges: the match set (_local_matches) ->
+        vectorized key -> top-k by (key desc, docid asc) -> BM25 for
+        the k survivors as the sum of idf * tf-norm factor over the
+        match set's own arrays.  ``rank`` is a {docid: rank} dict,
+        missing docs at 0.0.  Returns [(docid, sort_key, score)];
+        rank-identical to the Spark path (same integer keys), scores
+        agree to float tolerance."""
         import numpy as np
 
-        from search_engine_spark.indexer.codec import (
-            TermChunk,
-            tf_norm_factor,
-        )
-        from search_engine_spark.ops.ranking import (
-            PUBLISH_RANGE_DAYS,
-            RANK_MOD,
-        )
+        from search_engine_spark.ops.ranking import hash_rank_np, pub_day_np
 
         if sort_by in ("relevance", "score"):
             return [
-                (d, s, s) for d, s in self.search_local(query, k)
+                (d, s, s) for d, s in self.search_local(
+                    query, k, filter=filter, date_from=date_from,
+                    date_to=date_to, min_quality=min_quality,
+                )
             ]
         if sort_by not in ("date", "pagerank"):
             raise ValueError(f"unknown sortBy {sort_by!r}")
         terms = list(dict.fromkeys(tokenize_query(query)))
         if not terms:
             return []
-        m = self.meta
-        by_term = self._local_term_rows(terms)
-        if not by_term:
-            return []
-        ss, bs = int(m["slab_size"]), int(m["block_size"])
-        decoded: dict[str, list] = {}
-        for t, rows_t in by_term.items():
-            parts = []
-            for r in rows_t:
-                c = r.get("_chunk") or TermChunk(
-                    r["postings"], r["skips"], r["block_max"]
-                )
-                local, tf, _dl = c.decode_all(bs)
-                parts.append((local + int(r["slab"]) * ss, tf))
-            decoded[t] = parts
-        all_ids = np.unique(
-            np.concatenate(
-                [g for ps in decoded.values() for g, _ in ps]
-            )
+        ids, per_term = self._local_matches(
+            terms, filter, _dto_ranges(date_from, date_to, min_quality)
         )
-        tomb = self._tombstones_arr()
-        if tomb is not None and len(all_ids):
-            from search_engine_spark.query.wand import _not_in_sorted
-
-            all_ids = all_ids[_not_in_sorted(all_ids, tomb)]
         if sort_by == "date":
-            key = ((all_ids * 16807) % PUBLISH_RANGE_DAYS).astype(
-                np.float64
-            )
+            key = pub_day_np(ids).astype(np.float64)
         elif rank is None:
-            key = (
-                (all_ids * 2654435761) % RANK_MOD
-            ).astype(np.float64) / float(RANK_MOD)
+            key = hash_rank_np(ids)
         else:
-            key = np.array(
-                [float(rank.get(int(d), 0.0)) for d in all_ids]
-            )
-        order = np.lexsort((all_ids, -key))[:k]
-        surv, skey = all_ids[order], key[order]
-        n, df_map = float(m["n_docs"]), self._local_df(terms)
-        k1, b, avgdl = float(m["k1"]), float(m["b"]), float(m["avgdl"])
-        dlall = self._doclen_all()
+            # one sorted key/value pair of arrays per call (a sentinel
+            # key past every docid ends it), gathered by searchsorted
+            rk = np.fromiter(rank.keys(), np.int64, len(rank))
+            rv = np.fromiter(rank.values(), np.float64, len(rank))
+            o = np.argsort(rk)
+            rk = np.append(rk[o], np.iinfo(np.int64).max)
+            pos = np.searchsorted(rk, ids)
+            key = np.where(rk[pos] == ids, np.append(rv[o], 0.0)[pos], 0.0)
+        order = np.lexsort((ids, -key))[:k]
+        surv, skey = ids[order], key[order]
+        n, df_map = float(self.meta["n_docs"]), self._local_df(terms)
         score = np.zeros(len(surv), dtype=np.float64)
         for t in terms:
-            if t not in df_map:
+            if t not in df_map or t not in per_term:
                 continue
-            idf = _math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5))
-            for gids, tf in decoded[t]:
-                pos = np.searchsorted(gids, surv)
-                pos[pos >= len(gids)] = len(gids) - 1
-                hit = gids[pos] == surv
-                if not hit.any():
-                    continue
-                tfv = tf[pos[hit]].astype(np.float64)
-                dlv = dlall[surv[hit]].astype(np.float64)
-                score[hit] += idf * tf_norm_factor(tfv, dlv, k1, b, avgdl)
+            gids, fac = per_term[t]
+            idf = math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5))
+            pos = np.minimum(np.searchsorted(gids, surv), len(gids) - 1)
+            hit = gids[pos] == surv
+            score[hit] += idf * fac[pos[hit]]
         return [
             (int(d), float(kk), float(s))
             for d, kk, s in zip(surv, skey, score)
         ]
 
-    def _count_single_term_fast(self, term: str) -> int:
-        """Single-term A7 fast path: the (term, slab) inventory's df
-        column already counts distinct matching docs per slab
-        (generation chunks within a slab cover disjoint docid ranges),
-        so the count is the term's df sum, which _slabs_for caches per
-        generation beside its slabs — zero postings decode, and no IO
-        for a warm term."""
-        self._slabs_for([term])
-        return self._term_df_sum[term]
+    def _count_fast(self, terms: list[str]) -> "int | None":
+        """Single-term A7 count, or None with several terms, no
+        inventory or pending deletes: the term's summed inventory df
+        (generation chunks within a slab hold disjoint docids), cached
+        by _slabs_for — no postings decode, no IO for a warm term."""
+        if (
+            len(set(terms)) != 1 or self._term_slab_cache is None
+            or self._tombstones_arr() is not None
+        ):
+            return None
+        self._slabs_for(terms[:1])
+        return self._term_df_sum[terms[0]]
 
     def count_matches(self, query: str) -> int:
-        """A7 totalResults: exact count of docs matching >= 1 term.
-
-        Per-slab union of decoded posting docids (no scoring), summed;
-        slabs are disjoint docid ranges so the global count is the sum.
-        """
+        """A7 totalResults: exact count of live docs matching >= 1
+        term — the single-term inventory fast path, else the size of
+        the match set (_match_docids)."""
         terms = tokenize_query(query)
         if not terms:
             return 0
-        tomb = self._tombstones_arr()
-        if (
-            len(terms) == 1
-            and self._term_slab_cache is not None
-            and tomb is None  # pending deletes need the decode path
-        ):
-            # Multi-term OR keeps the decode below (union semantics
-            # need the actual docids).
-            return self._count_single_term_fast(terms[0])
-        import pandas as pd
-
-        from search_engine_spark.indexer.codec import TermChunk
-
-        block_size = int(self.meta["block_size"])
-        ss = int(self.meta["slab_size"])
-
-        def count_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            slab = int(pdf["slab"].iloc[0])
-            ids = [
-                TermChunk(r.postings, r.skips, r.block_max).decode_all(
-                    block_size
-                )[0]
-                for r in pdf.itertuples()
-            ]
-            if not ids:
-                return pd.DataFrame({"n": [0]})
-            u = np.unique(np.concatenate(ids))
-            if tomb is not None and len(u):
-                g = u + slab * ss
-                pos = np.searchsorted(tomb, g)
-                pos[pos >= len(tomb)] = len(tomb) - 1
-                u = u[tomb[pos] != g]
-            return pd.DataFrame({"n": [len(u)]})
-
-        seg = self._pruned_segments(terms).select(
-            "slab", "postings", "skips", "block_max"
-        )
-        per = seg.groupBy("slab").applyInPandas(count_group, schema="n long")
-        row = per.agg(F.sum("n").alias("total")).collect()[0]
-        return int(row["total"] or 0)
+        fast = self._count_fast(terms)
+        return fast if fast is not None else self._match_docids(terms).count()
 
     def count_matches_local(self, query: str) -> int:
         """Serving twin of ``count_matches`` (no Spark job): the same
-        single-term inventory fast path; multi-term via the pruned
-        pyarrow chunk reads and per-slab docid unions the facet and
-        WAND serving heads already use.  Exact — pinned equal to the
-        Spark path in pytest."""
-        import numpy as np
-
-        from search_engine_spark.indexer.codec import TermChunk
-
+        single-term inventory fast path, else the size of the match
+        set (_local_matches).  Exact — pinned equal to the Spark path
+        in pytest."""
         terms = list(dict.fromkeys(tokenize_query(query)))
         if not terms:
             return 0
-        tomb = self._tombstones_arr()
-        if (
-            len(terms) == 1
-            and self._term_slab_cache is not None
-            and tomb is None
-        ):
-            return self._count_single_term_fast(terms[0])
-        rows = self._local_term_rows(terms)
-        bs = int(self.meta["block_size"])
-        ss = int(self.meta["slab_size"])
-        by_slab: dict[int, list] = {}
-        for rows_t in rows.values():
-            for r in rows_t:
-                c = r.get("_chunk") or TermChunk(
-                    r["postings"], r["skips"], r["block_max"]
-                )
-                by_slab.setdefault(int(r["slab"]), []).append(
-                    c.decode_all(bs)[0]
-                )
-        total = 0
-        for slab, parts in by_slab.items():
-            u = np.unique(np.concatenate(parts))
-            if tomb is not None and len(u):
-                from search_engine_spark.query.wand import _not_in_sorted
-
-                u = u[_not_in_sorted(u + slab * ss, tomb)]
-            total += len(u)
-        return total
+        fast = self._count_fast(terms)
+        return fast if fast is not None else len(self._local_matches(terms)[0])
 
     # -- phrase retrieval (positional segments) ---------------------------
     def build_positions(self, use_arrow_udf: bool = True) -> dict:
@@ -2745,7 +2674,7 @@ class SearchEngine:
             docids, ptf = docids[keep], ptf[keep]
         if docids.size == 0:
             return []
-        dl = self._doclen_all()[docids].astype(np.float64)
+        dl = self._field_all("doclen")[docids].astype(np.float64)
         n, k1, b = float(m["n_docs"]), float(m["k1"]), float(m["b"])
         avgdl = float(m["avgdl"])
         dfv = float(docids.size)
@@ -2832,50 +2761,34 @@ class SearchEngine:
         ``dict_terms`` dictionary slice (a SpellingIndex: length band
         plus character-count prefilter, built once per generation).
         Returns the corrected query, or None if nothing changed."""
-        from search_engine_spark.config import TITLE_PREFIX
-        from search_engine_spark.query.expansion import (
-            EXTRA_MISSPELLINGS,
-            MISSPELLINGS,
-            SpellingIndex,
-            suggest_spelling,
-        )
+        from search_engine_spark.config import META_PREFIX, TITLE_PREFIX
 
-        terms = tokenize_query(query)
-        if not terms:
-            return None
-        merged_map = {**EXTRA_MISSPELLINGS, **MISSPELLINGS}
-        mapped = [merged_map.get(t, t) for t in terms]
-        known = {
-            r["term"]
-            for r in self.df_table.filter(
-                F.col("term").isin(mapped)
-            ).select("term").collect()
-        }
-        unknown = [t for t in mapped if t not in known]
-        out = list(mapped)
-        if unknown:
-            if self._dym_dict is None or self._dym_dict[0] != dict_terms:
-                # Built ONCE per engine generation (refresh()
-                # invalidates): title-namespace terms filtered BEFORE
-                # the limit and (df desc, term asc) ordering, so the
-                # dictionary holds exactly the top-df dict_terms
-                # content terms and its boundary is deterministic.
-                from search_engine_spark.config import META_PREFIX
+        def known(mapped: list[str]) -> set[str]:
+            return {
+                r["term"]
+                for r in self.df_table.filter(
+                    F.col("term").isin(mapped)
+                ).select("term").collect()
+            }
 
-                self._dym_dict = (dict_terms, SpellingIndex(
-                    r["term"]
-                    for r in self.df_table.filter(
-                        ~F.col("term").startswith(TITLE_PREFIX)
-                        & ~F.col("term").startswith(META_PREFIX)
-                    )
-                    .orderBy(F.desc("df"), F.asc("term"))
-                    .limit(dict_terms)
-                    .select("term")
-                    .collect()
-                ))
-            sug = suggest_spelling(unknown, self._dym_dict[1])
-            out = [sug.get(t, t) for t in out]
-        return " ".join(out) if out != terms else None
+        def dictionary():
+            # title- and metadata-namespace terms are filtered BEFORE
+            # the limit and (df desc, term asc) ordering, so the
+            # dictionary holds exactly the top-df dict_terms content
+            # terms and its boundary is deterministic
+            return (
+                r["term"]
+                for r in self.df_table.filter(
+                    ~F.col("term").startswith(TITLE_PREFIX)
+                    & ~F.col("term").startswith(META_PREFIX)
+                )
+                .orderBy(F.desc("df"), F.asc("term"))
+                .limit(dict_terms)
+                .select("term")
+                .collect()
+            )
+
+        return self._suggest(query, dict_terms, "_dym_dict", known, dictionary)
 
     def did_you_mean_local(
         self, query: str, dict_terms: int = 50_000
@@ -2884,8 +2797,28 @@ class SearchEngine:
         semantics over the per-generation pyarrow vocabulary
         (_local_vocab_df — already content-namespace-filtered), with
         the dictionary slice cut by the same (df desc, term asc)
-        order into a SpellingIndex once per generation and
-        ``dict_terms``.  Pinned equal to the Spark path in pytest."""
+        order.  Pinned equal to the Spark path in pytest."""
+
+        def known(mapped: list[str]) -> set[str]:
+            return set(mapped) & self._local_vocab_df().keys()
+
+        def dictionary():
+            top = sorted(
+                self._local_vocab_df().items(),
+                key=lambda kv: (-kv[1], kv[0]),
+            )
+            return (t for t, _ in top[:dict_terms])
+
+        return self._suggest(
+            query, dict_terms, "_dym_local", known, dictionary
+        )
+
+    def _suggest(self, query, dict_terms, slot, known, dictionary):
+        """The did_you_mean rule over one path's vocabulary: ``known``
+        maps the misspelling-mapped terms to those the index holds,
+        ``dictionary`` yields the dictionary slice, kept in the engine
+        attribute ``slot`` as (dict_terms, SpellingIndex) for the
+        generation (refresh() resets it)."""
         from search_engine_spark.query.expansion import (
             EXTRA_MISSPELLINGS,
             MISSPELLINGS,
@@ -2898,16 +2831,15 @@ class SearchEngine:
             return None
         merged_map = {**EXTRA_MISSPELLINGS, **MISSPELLINGS}
         mapped = [merged_map.get(t, t) for t in terms]
-        vocab = self._local_vocab_df()
-        unknown = [t for t in mapped if t not in vocab]
+        have = known(mapped)
+        unknown = [t for t in mapped if t not in have]
         out = list(mapped)
         if unknown:
-            if self._dym_local is None or self._dym_local[0] != dict_terms:
-                top = sorted(vocab.items(), key=lambda kv: (-kv[1], kv[0]))
-                self._dym_local = (dict_terms, SpellingIndex(
-                    t for t, _ in top[:dict_terms]
-                ))
-            sug = suggest_spelling(unknown, self._dym_local[1])
+            cur = getattr(self, slot)
+            if cur is None or cur[0] != dict_terms:
+                cur = (dict_terms, SpellingIndex(dictionary()))
+                setattr(self, slot, cur)
+            sug = suggest_spelling(unknown, cur[1])
             out = [sug.get(t, t) for t in out]
         return " ".join(out) if out != terms else None
 

@@ -11,6 +11,7 @@ log1p(factor * pagerank) (docs/features/query-expansion-nlp.md:280-287, X7).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -65,6 +66,11 @@ def pub_day_col(docid_col):
     )
 
 
+def pub_day_np(docids) -> np.ndarray:
+    """numpy twin of pub_day_col: int64 day offsets."""
+    return (np.asarray(docids, dtype=np.int64) * 16807) % PUBLISH_RANGE_DAYS
+
+
 def quality_py(content: str, toks: "list[str] | None" = None) -> float:
     """Pure-Python twin of quality_col — the SAME IEEE-double op
     order, so threshold comparisons land identically.  Used by the
@@ -107,6 +113,12 @@ def hash_rank_col(docid_col):
     integers — bit-identical in every engine)."""
     h = (docid_col.cast("long") * F.lit(2654435761)) % F.lit(RANK_MOD)
     return h.cast("double") / F.lit(float(RANK_MOD))
+
+
+def hash_rank_np(docids) -> np.ndarray:
+    """numpy twin of hash_rank_col: float64 ranks in [0, 1)."""
+    h = (np.asarray(docids, dtype=np.int64) * 2654435761) % RANK_MOD
+    return h.astype(np.float64) / float(RANK_MOD)
 
 
 def pagerank_boost_col(score, pagerank, factor: float = 2.0):

@@ -13,6 +13,12 @@ totalPages = ceil(total/size), searchTimeMs, results[url, title,
 snippet, relevanceScore, pagerankScore, language, crawledAt,
 highlightedTerms], suggestions).
 
+One flow serves both paths: ``execute`` runs it on Spark (page
+metadata by a broadcast join against the docmap) and
+``execute_local`` with no Spark job (page metadata from the engine's
+page store).  Both accept every request parameter, sortBy with any
+filter included, and give identical responses.
+
 Semantics notes (engine-defined where the reference left gaps):
 
 - ``totalResults`` counts by QUERY only (the reference's
@@ -103,9 +109,30 @@ class SearchDocumentsUseCase:
         self.engine = engine
         self.cache = cache if cache is not None else SearchCache()
 
-    def _prepare(self, request: dict, path: str):
-        """Request -> (query, page, size, sortBy, search kwargs, cache
-        key or None)."""
+    def execute(self, request: dict) -> dict:
+        """execute(SearchRequestDTO) -> SearchResponseDTO on Spark:
+        hits via search / search_sorted, total via count_matches,
+        suggestions via did_you_mean, and the page's metadata from a
+        broadcast join against the docmap.  ``rank`` here is a
+        (docid, rank) DataFrame."""
+        return self._execute(request, "spark")
+
+    def execute_local(self, request: dict) -> dict:
+        """Serving twin of ``execute`` — NO Spark job anywhere: hits
+        via search_local / search_local_sorted, total via
+        count_matches_local, suggestions via did_you_mean_local, and
+        the page's metadata and snippets from the engine's
+        per-generation page store (one searchsorted + take).  Every
+        request parameter is served, sortBy with any filter included.
+        Identical responses to execute() (pinned in pytest) at
+        serving-head latency — the shape a REST tier would run.
+        ``rank`` here is a {docid: rank} dict."""
+        return self._execute(request, "local")
+
+    def _execute(self, request: dict, path: str) -> dict:
+        """The one use-case flow; ``path`` ("spark" or "local") picks
+        the engine calls and the page metadata source."""
+        t0 = time.time()
         q = request["query"]
         page = int(request.get("page") or 0)
         size = int(request.get("size") or 10)
@@ -121,20 +148,44 @@ class SearchDocumentsUseCase:
             date_to=request.get("dateTo"),
             min_quality=request.get("minContentQuality"),
         )
-        key = None
-        if request.get("rank") is None:
-            key = "search:" + repr((
-                path, self.engine.generation, q, page, size, sort_by,
-                filters.get("lang"), filters.get("repo"),
-                kw["date_from"], kw["date_to"], kw["min_quality"],
-            ))
-        return q, page, size, sort_by, kw, key
-
-    def _cached(self, key):
+        eng, rank = self.engine, request.get("rank")
+        key = None if rank is not None else "search:" + repr((
+            path, eng.generation, q, page, size, sort_by,
+            filters.get("lang"), filters.get("repo"),
+            kw["date_from"], kw["date_to"], kw["min_quality"],
+        ))
         hit = self.cache.get(key) if key is not None else None
-        return _copy_response(hit) if hit is not None else None
-
-    def _respond(self, t0, key, q, page, size, total, results, dym):
+        if hit is not None:
+            return _copy_response(hit)
+        n_fetch = (page + 1) * size
+        relevance = sort_by in ("relevance", "score")
+        if path == "spark":
+            hits = (
+                eng.search(q, n_fetch, **kw) if relevance
+                else eng.search_sorted(q, n_fetch, sort_by, rank=rank, **kw)
+            )
+            rows = [
+                (int(r["docid"]), float(r["score"]))
+                for r in hits.select("docid", "score").collect()
+            ][page * size:]
+            total = eng.count_matches(q)
+            metas = self._page_meta(rows, rank)
+            dym = eng.did_you_mean(q) if total == 0 else None
+        else:
+            hits = (
+                eng.search_local(q, n_fetch, **kw) if relevance
+                else [
+                    (d, s) for d, _key, s in eng.search_local_sorted(
+                        q, n_fetch, sort_by, rank=rank, **kw
+                    )
+                ]
+            )
+            rows = hits[page * size:]
+            total = eng.count_matches_local(q)
+            metas = eng._page_rows([d for d, _ in rows]) if rows else []
+            for (d, _), m in zip(rows, metas):
+                m["prk"] = float((rank or {}).get(d, 0.0))
+            dym = eng.did_you_mean_local(q) if total == 0 else None
         # did_you_mean returns the corrected query or None (nothing
         # to suggest); the DTO carries a list either way
         response = {
@@ -144,137 +195,29 @@ class SearchDocumentsUseCase:
             "size": size,
             "totalPages": int(math.ceil(total / size)) if size else 0,
             "searchTimeMs": int((time.time() - t0) * 1000),
-            "results": results,
+            "results": _results(q, rows, metas),
             "suggestions": [dym] if dym else [],
         }
         if key is not None:
             self.cache.put(key, _copy_response(response), CACHE_TTL_SEC)
         return response
 
-    def execute(self, request: dict) -> dict:
-        t0 = time.time()
-        q, page, size, sort_by, kw, key = self._prepare(request, "spark")
-        hit = self._cached(key)
-        if hit is not None:
-            return hit
-        n_fetch = (page + 1) * size
-        if sort_by in ("relevance", "score"):
-            hits = self.engine.search(q, n_fetch, **kw)
-            hits = hits.select("docid", "score")
-        else:
-            hits = self.engine.search_sorted(
-                q, n_fetch, sort_by, rank=request.get("rank"), **kw
-            ).select("docid", "score")
-        rows = hits.collect()[page * size:]
-
-        total = self.engine.count_matches(q)
-        results = self._map_results(q, rows, request.get("rank"))
-        dym = self.engine.did_you_mean(q) if total == 0 else None
-        return self._respond(t0, key, q, page, size, total, results, dym)
-
-    def execute_local(self, request: dict) -> dict:
-        """Serving twin of ``execute`` — NO Spark job anywhere: hits
-        via search_local / search_local_sorted, total via
-        count_matches_local, suggestions via did_you_mean_local, and
-        the page's metadata and snippets from the engine's
-        per-generation page store (one searchsorted + take).
-        Identical responses to execute() (pinned in pytest) at
-        serving-head latency — the shape a REST tier would run.
-
-        Boundary: sortBy date/pagerank combined with field/range
-        filters needs the Spark path (search_local_sorted takes no
-        filters); ``rank`` here is a {docid: rank} dict, not a
-        DataFrame."""
-        t0 = time.time()
-        q, page, size, sort_by, kw, key = self._prepare(request, "local")
-        hit = self._cached(key)
-        if hit is not None:
-            return hit
-        n_fetch = (page + 1) * size
-        if sort_by in ("relevance", "score"):
-            hits = self.engine.search_local(q, n_fetch, **kw)
-        else:
-            if any(v is not None for v in kw.values()):
-                raise NotImplementedError(
-                    "sortBy date/pagerank with filters: use execute()"
-                )
-            hits = [
-                (d, s)
-                for d, _key, s in self.engine.search_local_sorted(
-                    q, n_fetch, sort_by, rank=request.get("rank")
-                )
-            ]
-        rows = hits[page * size:]
-        total = self.engine.count_matches_local(q)
-        results = self._map_results_local(q, rows, request.get("rank"))
-        dym = self.engine.did_you_mean_local(q) if total == 0 else None
-        return self._respond(t0, key, q, page, size, total, results, dym)
-
-    def _map_results_local(self, q: str, rows, rank):
-        """No-Spark DTO mapping from the engine's per-generation page
-        store (SearchEngine._page_store: the docmap's DTO projection,
-        snippet included, read once per generation) instead of a
-        Spark join."""
-        from search_engine_spark.ops.ranking import (
-            PUBLISH_EPOCH,
-            PUBLISH_RANGE_DAYS,
-        )
-
-        if not rows:
-            return []
-        metas = self.engine._page_rows([int(d) for d, _ in rows])
-        epoch = datetime.date.fromisoformat(PUBLISH_EPOCH)
-        terms = tokenize_query(q)
-        rank_map = rank or {}
-        out = []
-        for (d, s), m in zip(rows, metas):
-            day = (int(d) * 16807) % PUBLISH_RANGE_DAYS
-            out.append(
-                {
-                    "url": f"{m['repo']}/{m['path']}@{m['commit']}",
-                    "title": m["path"].rsplit("/", 1)[-1],
-                    "snippet": m["snippet"],
-                    "relevanceScore": float(s),
-                    "pagerankScore": float(rank_map.get(int(d), 0.0)),
-                    "language": m["lang"],
-                    "crawledAt": (
-                        epoch + datetime.timedelta(days=day)
-                    ).isoformat(),
-                    "highlightedTerms": list(terms),
-                }
-            )
-        return out
-
-    def _map_results(self, q: str, rows, rank: DataFrame | None):
-        """Domain-entity -> DTO mapping (UseCase.java:93-102) for one
-        page of (docid, score) hits: broadcast the tiny page against
-        the docmap projection — never shuffle the corpus."""
-        from search_engine_spark.indexer.docmap import title_col
-        from search_engine_spark.ops.ranking import (
-            PUBLISH_EPOCH,
-            pub_day_col,
-        )
+    def _page_meta(self, rows, rank: DataFrame | None) -> list[dict]:
+        """The Spark path's page metadata, in ``rows`` order: the tiny
+        page broadcast against the docmap projection — never shuffle
+        the corpus — with the plain snippet and the ``rank`` table's
+        pagerank ("prk", 0.0 when absent)."""
         from search_engine_spark.query.highlight import plain_snippet_col
 
         if not rows:
             return []
         eng = self.engine
         page_df = eng.spark.createDataFrame(
-            [(int(r["docid"]), float(r["score"])) for r in rows],
-            "docid long, score double",
+            [(d,) for d, _ in rows], "docid long"
         )
-        snippet = plain_snippet_col("content")
         meta = eng.docmap.join(F.broadcast(page_df), "docid").select(
-            "docid",
-            "score",
-            F.concat_ws(
-                "", F.col("repo"), F.lit("/"), F.col("path"),
-                F.lit("@"), F.col("commit"),
-            ).alias("url"),
-            title_col("path").alias("title"),
-            snippet.alias("snippet"),
-            F.col("lang").alias("language"),
-            pub_day_col(F.col("docid")).cast("int").alias("day"),
+            "docid", "repo", "path", "commit", "lang",
+            plain_snippet_col("content").alias("snippet"),
         )
         if rank is not None:
             r = rank.select(
@@ -286,24 +229,29 @@ class SearchDocumentsUseCase:
             )
         else:
             meta = meta.withColumn("prk", F.lit(0.0))
-        by_id = {int(m["docid"]): m for m in meta.collect()}
-        epoch = datetime.date.fromisoformat(PUBLISH_EPOCH)
-        terms = tokenize_query(q)
-        out = []
-        for r in rows:  # preserve the page's rank order
-            m = by_id[int(r["docid"])]
-            out.append(
-                {
-                    "url": m["url"],
-                    "title": m["title"],
-                    "snippet": m["snippet"],
-                    "relevanceScore": float(r["score"]),
-                    "pagerankScore": float(m["prk"]),
-                    "language": m["language"],
-                    "crawledAt": (
-                        epoch + datetime.timedelta(days=int(m["day"]))
-                    ).isoformat(),
-                    "highlightedTerms": list(terms),
-                }
-            )
-        return out
+        by_id = {int(m["docid"]): m.asDict() for m in meta.collect()}
+        return [by_id[d] for d, _ in rows]
+
+
+def _results(q: str, rows, metas) -> list[dict]:
+    """Domain-entity -> DTO mapping (UseCase.java:93-102) of one page
+    of (docid, score) hits and their metadata rows (repo, path,
+    commit, lang, snippet, prk), in rank order."""
+    from search_engine_spark.ops.ranking import PUBLISH_EPOCH, pub_day_np
+
+    epoch = datetime.date.fromisoformat(PUBLISH_EPOCH)
+    days = pub_day_np([d for d, _ in rows]).tolist()
+    terms = tokenize_query(q)
+    return [
+        {
+            "url": f"{m['repo']}/{m['path']}@{m['commit']}",
+            "title": m["path"].rsplit("/", 1)[-1],
+            "snippet": m["snippet"],
+            "relevanceScore": float(s),
+            "pagerankScore": float(m["prk"]),
+            "language": m["lang"],
+            "crawledAt": (epoch + datetime.timedelta(days=day)).isoformat(),
+            "highlightedTerms": list(terms),
+        }
+        for (_d, s), m, day in zip(rows, metas, days)
+    ]

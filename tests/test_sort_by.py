@@ -1,8 +1,9 @@
 """SearchRequestDTO sortBy semantics (engine.search_sorted /
 search_local_sorted / contract.q_bm25_sorted): brute-force oracle
-pins for date and pagerank keys, Spark-vs-serving identity, explicit
-rank-table joins with missing-doc zeros, and the relevance
-passthrough.
+pins for date and pagerank keys, Spark-vs-serving identity with and
+without filters, explicit rank-table joins with missing-doc zeros,
+the relevance passthrough, and the numpy twins of the synthetic
+keys.
 
 Reference: SearchRequestDTO.java:19 declares sortBy in
 {relevance, date, pagerank}; SearchControllerV2.java:46 plumbs it to
@@ -12,16 +13,21 @@ the repository whose Spring Data findAll never applies it (SURVEY
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.corpus import corpus_df, corpus_pandas
 from search_engine_spark.engine import SearchEngine
 from search_engine_spark.indexer.build import build_index
-from search_engine_spark.ops.ranking import PUBLISH_RANGE_DAYS, RANK_MOD
+from search_engine_spark.ops.ranking import (
+    PUBLISH_RANGE_DAYS,
+    RANK_MOD,
+    hash_rank_col,
+    hash_rank_np,
+    pub_day_col,
+    pub_day_np,
+)
 from tests.oracle import OracleIndex
 
 N_DOCS = 500
@@ -43,15 +49,18 @@ def oracle():
     return OracleIndex(corpus_pandas(N_DOCS).to_dict("records"))
 
 
-def _brute(oracle, q, sort_by, k, rank=None):
-    """Python reference: union of matching docs, key, top-k by
-    (key desc, docid asc), BM25 score per survivor."""
+def _brute(oracle, q, sort_by, k, rank=None, admit=None):
+    """Python reference: union of matching docs (those ``admit``
+    accepts), key, top-k by (key desc, docid asc), BM25 score per
+    survivor."""
     from search_engine_spark.tokenizer import tokenize_query
 
     terms = tokenize_query(q)
     match = set()
     for t in terms:
         match |= set(oracle.postings.get(t, {}))
+    if admit is not None:
+        match = {d for d in match if admit(d)}
     rows = []
     for d in match:
         if sort_by == "date":
@@ -110,13 +119,17 @@ def test_serving_sorted_identity(engine, q, sort_by):
 
 def test_explicit_rank_table(engine, oracle, spark):
     """A supplied (docid, rank) table orders the hits; docs absent
-    from the table sort at 0.0 with docid tiebreak."""
+    from the table sort at 0.0 with docid tiebreak, and a ranked doc
+    that does not match stays out.  The serving path takes the same
+    table as a dict."""
     q = "query parse"
     match = set()
     for t in q.split():
         match |= set(oracle.postings.get(t, {}))
     some = sorted(match)[:5]
     ranks = {d: 1.0 / (i + 1) for i, d in enumerate(some)}
+    ranks[min(set(range(N_DOCS)) - match)] = 2.0  # ranked, no match
+    assert len(match) > len(some) + 8  # the page reaches unranked docs
     rdf = spark.createDataFrame(
         [(d, r) for d, r in ranks.items()], "docid long, rank double"
     )
@@ -126,10 +139,54 @@ def test_explicit_rank_table(engine, oracle, spark):
             q, 8, sort_by="pagerank", rank=rdf
         ).collect()
     ]
-    want = [(d, k) for d, k, _ in _brute(oracle, q, "pagerank", 8, ranks)]
-    assert got == want
+    want = _brute(oracle, q, "pagerank", 8, ranks)
+    assert got == [(d, k) for d, k, _ in want]
     local = engine.search_local_sorted(q, 8, sort_by="pagerank", rank=ranks)
-    assert [(d, k) for d, k, _ in local] == want
+    assert [(d, k) for d, k, _ in local] == [(d, k) for d, k, _ in want]
+    assert [s for _, _, s in local] == pytest.approx(
+        [s for _, _, s in want], rel=1e-9
+    )
+
+
+@pytest.mark.parametrize("sort_by", ["date", "pagerank"])
+def test_filtered_sorted_vs_spark_and_brute(engine, oracle, sort_by):
+    """search_local_sorted takes search_local's filter and range
+    keywords: the same (docid, key) rows as search_sorted and as the
+    brute force over the admitted match set, scores to 1e-9."""
+    q = "query parse buffer"
+    lang = {d["docid"]: d["lang"] for d in oracle.docmap}
+    kw = dict(filter={"lang": "python"}, date_from=300, min_quality=0.3)
+
+    def admit(d):
+        return (
+            lang[d] == "python" and (d * 16807) % PUBLISH_RANGE_DAYS >= 300
+            and oracle.quality[d] >= 0.3
+        )
+
+    want = _brute(oracle, q, sort_by, 12, admit=admit)
+    assert len(want) == 12
+    spark_rows = [
+        (int(r["docid"]), float(r["sort_key"]), float(r["score"]))
+        for r in engine.search_sorted(q, 12, sort_by, **kw).collect()
+    ]
+    local = engine.search_local_sorted(q, 12, sort_by, **kw)
+    for got in (spark_rows, local):
+        assert [(d, k) for d, k, _ in got] == [(d, k) for d, k, _ in want]
+        assert [s for _, _, s in got] == pytest.approx(
+            [s for _, _, s in want], rel=1e-9
+        )
+
+
+def test_synthetic_key_twins(spark):
+    """pub_day_np and hash_rank_np equal their Column versions."""
+    ids = list(range(0, 200_000, 37)) + [2**31 - 1, 3_000_000_000]
+    rows = spark.createDataFrame([(d,) for d in ids], "d long").select(
+        "d", pub_day_col(F.col("d")).alias("day"),
+        hash_rank_col(F.col("d")).alias("rank"),
+    ).orderBy("d").collect()
+    assert [r["d"] for r in rows] == ids
+    assert pub_day_np(ids).tolist() == [r["day"] for r in rows]
+    assert hash_rank_np(ids).tolist() == [r["rank"] for r in rows]
 
 
 def test_relevance_passthrough_and_errors(engine):

@@ -201,6 +201,11 @@ REQUESTS = [
      "dateFrom": 100, "dateTo": 2000},
     {"query": "zzznosuchword"},
     {"query": QUERY, "size": 6, "sortBy": "date"},
+    {"query": QUERY, "size": 6, "sortBy": "date", "language": "python"},
+    {"query": QUERY, "page": 1, "size": 3, "sortBy": "date",
+     "domain": "org/repo-0000"},
+    {"query": QUERY, "size": 5, "sortBy": "date", "dateFrom": 100,
+     "dateTo": 2000, "minContentQuality": 0.4},
 ]
 
 
@@ -222,6 +227,43 @@ def _assert_twins(engine, req):
     return b
 
 
+def _assert_match_twins(eng, *local_engines):
+    """count, facets and sorted (filtered or not): each serving twin
+    on ``local_engines`` (same index as ``eng``) equals the Spark
+    path on ``eng``."""
+    spark_sorted = {}
+    for sort_by in ("date", "pagerank"):
+        for kw in ({}, {"filter": {"lang": "python"}, "date_from": 100}):
+            spark_sorted[sort_by, repr(kw)] = (kw, [
+                (int(r["docid"]), float(r["sort_key"]), float(r["score"]))
+                for r in eng.search_sorted(QUERY, 8, sort_by, **kw).collect()
+            ])
+    counts = {q: eng.count_matches(q) for q in (QUERY, "query")}
+    facets = [
+        (r["lang"], int(r["cnt"]))
+        for r in eng.facet_counts(QUERY, "lang", 5).collect()
+    ]
+    for loc in local_engines:
+        for q, n in counts.items():
+            assert loc.count_matches_local(q) == n, q
+        assert loc.facet_counts_local(QUERY, "lang", 5) == facets
+        for (sort_by, _), (kw, want) in spark_sorted.items():
+            got = loc.search_local_sorted(QUERY, 8, sort_by, **kw)
+            assert [x[:2] for x in got] == [x[:2] for x in want], kw
+            assert [x[2] for x in got] == pytest.approx(
+                [x[2] for x in want], rel=1e-9
+            )
+
+
+def _scan_engine(eng):
+    """A second engine on ``eng``'s index with both serving caches
+    off: per-query pruned scans and per-chunk factors."""
+    scan = SearchEngine(eng.spark, eng.index_dir)
+    scan.serving_cache_buckets = 0
+    scan.serving_decoded_max_bytes = 0
+    return scan
+
+
 @pytest.mark.parametrize("req", REQUESTS)
 def test_execute_local_identity(engine, req):
     """The no-Spark execute twin returns the IDENTICAL response
@@ -237,7 +279,10 @@ def test_execute_local_identity_through_lifecycle(spark, tmp_path):
     and the spelling index follow the index generation (the append
     adds the word the zero-hit request is one edit from, so its
     suggestion changes).  A use case that cached pages before the
-    delete answers for the new generation after it."""
+    delete answers for the new generation after it.  After the
+    append (a second generation in the last slab, deletes pending)
+    count, facets and sorted match the Spark path with the serving
+    caches on and off."""
     from search_engine_spark.indexer.build import (
         append_documents,
         delete_documents,
@@ -284,6 +329,10 @@ def test_execute_local_identity_through_lifecycle(spark, tmp_path):
     assert sorted(r["url"] for r in hits["results"]) == [
         f"zz/new/src/new{i}.py@c0ffee" for i in range(3)
     ]
+    _assert_match_twins(eng, eng, _scan_engine(eng))
+    for t in ("query", "parse", "buffer"):  # primed arrays stay sorted
+        gids = eng._decoded_cache[t]["gids"]
+        assert (gids[1:] > gids[:-1]).all(), t
 
 
 SNIPPET_TEXTS = [
@@ -343,21 +392,16 @@ def test_snippet_identity_at_boundaries(spark, tmp_path):
 
 
 def test_count_matches_local_identity(engine):
+    scan = _scan_engine(engine)
     for q in [QUERY, "query", "zzznosuchword", "crawl rank"]:
-        assert engine.count_matches_local(q) == engine.count_matches(q)
+        want = engine.count_matches(q)
+        assert engine.count_matches_local(q) == want
+        assert scan.count_matches_local(q) == want
 
 
 def test_did_you_mean_local_identity(engine):
     for q in ["qurey parse", "zzznosuchword", QUERY, "databsae"]:
         assert engine.did_you_mean_local(q) == engine.did_you_mean(q)
-
-
-def test_execute_local_sorted_with_filters_boundary(engine):
-    uc = SearchDocumentsUseCase(engine)
-    with pytest.raises(NotImplementedError):
-        uc.execute_local(
-            {"query": QUERY, "sortBy": "date", "language": "python"}
-        )
 
 
 def test_get_suggestions(engine):
